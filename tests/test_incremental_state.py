@@ -107,3 +107,28 @@ def test_profile_column_stats_rejects_unstable_cast_types(spark, monkeypatch):
     monkeypatch.setattr(agg, "load_table", load_with_double)
     with pytest.raises(TypeError, match="n_chars.*double"):
         agg.profile_column_stats(spark, "/root/testdata/sf0.001")
+
+
+def test_incr_build_state_keeps_both_errors_when_both_writes_fail(
+    spark, tmp_path, monkeypatch
+):
+    """When the doc_sets/bands chain fails while the concurrent text_hashes
+    write fails too, the chain's error is raised and the write's error
+    travels with it (as its cause and in a note) instead of vanishing."""
+    import traceback
+
+    import vena_etl_tool_spark.operators.dedup as dedup
+
+    def broken_chain(_docs):
+        raise RuntimeError("doc_sets chain failed")
+
+    monkeypatch.setattr(dedup, "_minhash_per_doc", broken_chain)
+    no_text = spark.createDataFrame([(1, "a")], "doc_id long, source string")
+    with pytest.raises(RuntimeError, match="doc_sets chain failed") as info:
+        dedup.incr_build_state(no_text, str(tmp_path / "state"))
+    err = info.value
+    assert err.__cause__ is not None and "text" in str(err.__cause__)
+    shown = "".join(traceback.format_exception(err))
+    assert "doc_sets chain failed" in shown
+    assert "concurrent text_hashes write also failed" in shown
+    assert type(err.__cause__).__name__ in shown

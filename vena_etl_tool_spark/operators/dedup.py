@@ -1590,21 +1590,35 @@ def incr_build_state(old_docs: DataFrame, state: str) -> str:
             "overwrite"
         ).parquet(_os.path.join(state, "text_hashes"))
 
+    chain_err: BaseException | None = None
     with ThreadPoolExecutor(max_workers=1) as pool:
         th_job = pool.submit(write_text_hashes)
-        _minhash_per_doc(old_docs).write.mode("overwrite").parquet(per_doc_path)
-        persisted = old_docs.sparkSession.read.parquet(per_doc_path)
-        old_bands = _per_doc_bands(persisted)
-        bsz_w = Window.partitionBy("band_id", "band_key")
-        old_bands_capped = (
-            old_bands.withColumn("_bsz", F.count(F.lit(1)).over(bsz_w))
-            .filter(F.col("_bsz") <= INCR_BAND_CAP)
-            .drop("_bsz")
-        )
-        old_bands_capped.write.mode("overwrite").parquet(
-            _os.path.join(state, "bands")
-        )
-        th_job.result()  # surface any failure; join before callers read state
+        try:
+            _minhash_per_doc(old_docs).write.mode("overwrite").parquet(per_doc_path)
+            persisted = old_docs.sparkSession.read.parquet(per_doc_path)
+            old_bands = _per_doc_bands(persisted)
+            bsz_w = Window.partitionBy("band_id", "band_key")
+            old_bands_capped = (
+                old_bands.withColumn("_bsz", F.count(F.lit(1)).over(bsz_w))
+                .filter(F.col("_bsz") <= INCR_BAND_CAP)
+                .drop("_bsz")
+            )
+            old_bands_capped.write.mode("overwrite").parquet(
+                _os.path.join(state, "bands")
+            )
+        except BaseException as e:
+            chain_err = e
+            raise
+        finally:
+            # join the write before callers read state; when both fail, the
+            # chain's error stays primary and carries the write's as its cause
+            th_err = th_job.exception()
+            if th_err is not None:
+                if chain_err is None:
+                    raise th_err
+                chain_err.add_note(f"concurrent text_hashes write also failed: {th_err!r}")
+                if chain_err.__cause__ is None:
+                    chain_err.__cause__ = th_err
     return state
 
 

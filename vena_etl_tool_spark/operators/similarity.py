@@ -2997,11 +2997,18 @@ def _np_dot_floor(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
     to the SQL fold: (x*y)*1e12 elementwise left-assoc in float64, floor
     (|terms| ≤ ~2.5e13 < 2^53 so floor and the int64 cast are exact), int64
     row-sum (exact in any order), cast back (≤ 16·2.5e13 < 2^53, exactly
-    representable), divide by 1e12."""
-    return (
-        np.floor((a * b) * 1e12).astype(np.int64).sum(axis=1).astype(np.float64)
-        / 1e12
-    )
+    representable), divide by 1e12.
+
+    The |term| < 2^53 bound is checked, not assumed: past it numpy's int64
+    cast wraps where the JVM's saturates, so data that breaks the contract
+    (or NaN/inf) raises instead of silently changing the hash."""
+    terms = np.floor((a * b) * 1e12)
+    if not np.all(np.abs(terms) < 2.0**53):
+        raise ValueError(
+            "dot_exact contract broken: a scaled term has |x*y*1e12| >= 2^53 "
+            "(or is NaN/inf); rescale the 1e12 factor for these magnitudes"
+        )
+    return terms.astype(np.int64).sum(axis=1).astype(np.float64) / 1e12
 
 
 def _maxsim_np_score(q: "np.ndarray", c: "np.ndarray") -> "np.ndarray":

@@ -23,6 +23,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import table_schema
 from ..registry import register
 from ..session import configure
 
@@ -36,9 +37,6 @@ _SCHEMA_TS_NATIVE = (
 _SCHEMA_TS_LONG = (
     "event_id long, ts long, user_id long, event_type string, value double, props string"
 )
-
-# Cache of the probed events-ts read dtype, keyed by sf_dir (stable per run).
-_TS_DTYPE_CACHE: dict[str, str] = {}
 
 # Stale-sink TTL: a sibling PID's workdir untouched for this long is a
 # leftover from a dead run (our queries finish in seconds), not a live
@@ -77,16 +75,11 @@ def fresh_stream_workdir(name: str) -> str:
 
 
 def _events_ts_dtype(spark: SparkSession, sf_dir: str) -> str:
-    """Batch-probe the dtype the parquet reader produces for events.ts.
-
-    Footer-only read (no data scan). Streams must declare their schema up
-    front, so we branch on the same observed dtype as the batch loader —
-    never on `nanosAsLong`, which pyspark 4.1+ silently ignores.
-    """
-    if sf_dir not in _TS_DTYPE_CACHE:
-        batch = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        _TS_DTYPE_CACHE[sf_dir] = dict(batch.dtypes)["ts"]
-    return _TS_DTYPE_CACHE[sf_dir]
+    """The dtype the parquet reader produces for events.ts, from the
+    catalog's schema memo. Streams must declare their schema up front,
+    so we branch on the same observed dtype as the batch loader — never
+    on `nanosAsLong`, which pyspark 4.1+ silently ignores."""
+    return table_schema(spark, sf_dir, "events")["ts"].dataType.simpleString()
 
 
 def table_stream(spark: SparkSession, sf_dir: str, table: str, schema) -> DataFrame:
@@ -814,7 +807,6 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency-state topology at 100 TB: per-batch/per-shard sketches are
     tiny constant-size state, merged downstream by addition, never a
     corpus-sized shuffle."""
-    import os
     import tempfile
 
     from ..operators.textanalysis import CMS_DEPTH
@@ -822,10 +814,9 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .foreach_batch import run_foreach_batch
 
     configure(spark)
-    batch_schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).schema
-    docs = table_stream(spark, sf_dir, "documents", batch_schema)
+    docs = table_stream(
+        spark, sf_dir, "documents", table_schema(spark, sf_dir, "documents")
+    )
     cell_structs = F.array(
         *[
             F.struct(F.lit(d).alias("d"), F.expr(_cms_col_spark(d)).alias("col"))
@@ -895,17 +886,15 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape per batch: map-side-combined token aggregate into ≤
     sources×64 register rows; driver-held state is a few KB; the merge
     is a 64-row groupBy."""
-    import os
     import tempfile
 
     from ..operators.textanalysis import _HLL_H_SPARK, _hll_register_sql
     from .foreach_batch import run_foreach_batch
 
     configure(spark)
-    batch_schema = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).schema
-    docs = table_stream(spark, sf_dir, "documents", batch_schema)
+    docs = table_stream(
+        spark, sf_dir, "documents", table_schema(spark, sf_dir, "documents")
+    )
     j_expr, rho_expr = _hll_register_sql(_HLL_H_SPARK, "div")
     subsketches: list[tuple[int, str, int, int]] = []
 
