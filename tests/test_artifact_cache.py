@@ -253,3 +253,47 @@ def test_graph_consumers_share_one_build(spark, sf_dir):
         assert g1.storageLevel.useMemory or g1.storageLevel.useDisk
     finally:
         _drop("mutual_knn_graph")
+
+
+def test_fallback_builds_serving_index_once(spark, sf_dir, tmp_path, monkeypatch):
+    """With no session token to key the shared cache on, the fallback must
+    still build once per call: the serving index is read once per
+    micro-batch that requests a fresh query id, and none of those reads
+    may replay the whole RRF+IVF build."""
+    import pyspark.sql.functions as F
+
+    from vena_etl_tool_spark.operators import _shared, retrieval
+    from vena_etl_tool_spark.streaming.queries import events_stream
+
+    monkeypatch.setattr(_shared, "_session_token", lambda spark: None)
+    index_rows = spark.sparkContext.accumulator(0)
+    build = retrieval.retrieval_rrf_fusion_ivf
+
+    def count_row(_):
+        index_rows.add(1)
+        return True
+
+    counter = F.udf(count_row, "boolean").asNondeterministic()
+    monkeypatch.setattr(
+        retrieval,
+        "retrieval_rrf_fusion_ivf",
+        lambda spark, sf_dir: build(spark, sf_dir).filter(counter("query_id")),
+    )
+    # one file per requested event type, one file per micro-batch, so
+    # every batch serves a fresh query id
+    by_type = str(tmp_path / "events_by_type")
+    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    for event_type, _ in retrieval.SERVE_REQUEST_MAP:
+        events.filter(F.col("event_type") == event_type).coalesce(1).write.mode(
+            "append"
+        ).parquet(by_type)
+    stream = (
+        spark.readStream.schema(events_stream(spark, sf_dir).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(by_type)
+    )
+
+    served = retrieval.serve_query_log(spark, sf_dir, stream).collect()
+    n_index = build(spark, sf_dir).count()
+    assert len({r.query_id for r in served}) >= 2  # at least two batches read it
+    assert index_rows.value == n_index  # one build

@@ -105,7 +105,7 @@ def test_maxsim_matches_numpy_reference(spark, vecs):
             total += best
         return total
 
-    from vena_etl_tool_spark.operators.similarity import dot_exact
+    from vena_etl_tool_spark.operators.exact import dot_exact
 
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],

@@ -6,15 +6,10 @@ import math
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
 from vena_etl_tool_spark.catalog import load_table
 from vena_etl_tool_spark.operators.similarity import (
-    MAXSIM_DIM,
     TOP_K,
-    _np_dot_floor,
-    dot_exact,
     sim_ann_lsh,
     sim_cosine_topk,
 )
@@ -218,56 +213,3 @@ def test_trained_pq_beats_untrained(spark, sf_dir):
     )
     u_rec = sim_ann_adc_recall(spark, sf_dir).agg(F.avg("recall_at_k")).first()[0]
     assert t_rec >= u_rec, (t_rec, u_rec)
-
-
-# |x|, |y| <= 94 keeps every scaled term |x*y*1e12| <= 8.84e15 < 2^53
-_in_contract = st.floats(min_value=-94.0, max_value=94.0, allow_nan=False)
-_vec = st.lists(_in_contract, min_size=MAXSIM_DIM, max_size=MAXSIM_DIM)
-
-
-@given(
-    a=_vec,
-    b=_vec,
-    i=st.integers(min_value=0, max_value=MAXSIM_DIM - 1),
-    x=st.floats(min_value=95.0, max_value=1e6),
-    y=st.floats(min_value=95.0, max_value=1e6),
-    sign=st.sampled_from([1.0, -1.0]),
-)
-@settings(max_examples=100, deadline=None)
-def test_np_dot_floor_guard_trips_past_2_53(a, b, i, x, y, sign):
-    """One term with |x*y*1e12| >= 2^53 (95^2 * 1e12 > 2^53) must raise:
-    numpy's int64 cast would wrap there where the JVM saturates."""
-    a[i], b[i] = x, sign * y
-    with pytest.raises(ValueError, match="2\\^53"):
-        _np_dot_floor(np.array([a]), np.array([b]))
-
-
-def test_np_dot_floor_guard_rejects_nan():
-    a = np.zeros((1, MAXSIM_DIM))
-    a[0, 3] = np.nan
-    with pytest.raises(ValueError, match="NaN"):
-        _np_dot_floor(a, np.ones((1, MAXSIM_DIM)))
-
-
-@given(a=_vec, b=_vec)
-@settings(max_examples=200, deadline=None)
-def test_np_dot_floor_in_contract_matches_scalar_fold(a, b):
-    expect = sum(math.floor(x * y * 1e12) for x, y in zip(a, b)) / 1e12
-    assert _np_dot_floor(np.array([a]), np.array([b]))[0] == expect
-
-
-def test_np_dot_floor_matches_jvm_fold_exactly(spark):
-    """In-contract inputs, up to the bound, give dot_exact's exact values."""
-    rng = np.random.default_rng(7)
-    a = np.vstack([rng.uniform(-94, 94, (100, MAXSIM_DIM)), rng.normal(0, 1, (100, MAXSIM_DIM))])
-    b = np.vstack([rng.uniform(-94, 94, (100, MAXSIM_DIM)), rng.normal(0, 1, (100, MAXSIM_DIM))])
-    df = spark.createDataFrame(
-        [(i, a[i].tolist(), b[i].tolist()) for i in range(len(a))],
-        "i int, a array<double>, b array<double>",
-    )
-    jvm = {
-        r.i: r.d
-        for r in df.select("i", dot_exact(df.a, df.b).alias("d")).collect()
-    }
-    got = _np_dot_floor(a, b)
-    assert [jvm[i] for i in range(len(a))] == got.tolist()

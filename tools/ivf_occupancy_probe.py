@@ -33,11 +33,11 @@ import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import Window  # noqa: E402
 
 from vena_etl_tool_spark.catalog import load_table  # noqa: E402
+from vena_etl_tool_spark.operators.exact import dot_exact  # noqa: E402
 from vena_etl_tool_spark.operators.similarity import (  # noqa: E402
     IVF_NPROBE,
     N_QUERIES,
     TOP_K,
-    dot_exact,
     with_sq_norm,
 )
 from vena_etl_tool_spark.session import get_spark  # noqa: E402

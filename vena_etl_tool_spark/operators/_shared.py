@@ -131,17 +131,21 @@ def persisted_artifact(spark, name: str, files, build) -> "DataFrame":
     it with ``build()`` on first use. Falls back to an unshared build when
     the source has no file identity (in-memory test frames) or the session
     surfaces no app id / conf (a dead session's id() can be reused by a new
-    one, so identity-keyed caching could serve a defunct-session DataFrame)."""
+    one, so identity-keyed caching could serve a defunct-session DataFrame).
+    The fallback is still materialized once, eagerly: a caller that reads
+    the result many times (one filter per streaming micro-batch) must not
+    replay the whole build on every read."""
     files = tuple(sorted(files))
-    if not files:
-        return build()
-    try:
-        app = spark.conf.get("spark.app.id")
-    except Exception:
-        return build()
-    tok = _session_token(spark)
+    app = tok = None
+    if files:
+        try:
+            app = spark.conf.get("spark.app.id")
+        except Exception:
+            pass
+        else:
+            tok = _session_token(spark)
     if tok is None:
-        return build()
+        return build().localCheckpoint()
     key = (app, tok, name, files)
     # lock spans check-build-insert: two concurrent misses on one key must
     # not both persist (the loser's blocks would pin with no handle left)

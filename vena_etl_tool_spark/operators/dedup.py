@@ -28,6 +28,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from ..catalog import load_table
 from ..registry import register
 from ._shared import persisted_artifact, spread_small
+from .exact import (
+    descale_sql,
+    duck_dot_sql,
+    duck_sq_sql,
+    np_descale,
+    np_dot_scaled,
+    spark_dot_sql,
+)
 
 # Hot-shingle guard for the n-gram Jaccard blocking join: shingles shared
 # by more than this many documents are dropped before the self-join (a
@@ -661,8 +669,8 @@ def simhash_fingerprints(
 
 # Embedding-LSH blocking for dedup_embedding_cosine: 8 bands × 6 sign bits
 # against fixed random hyperplanes (seed pinned). Bucket bits come from the
-# SIGN of an integer-exact scaled-long dot product (same trick as
-# similarity.dot_exact), so Spark and DuckDB compute bit-identical buckets —
+# SIGN of an integer-exact scaled-long dot product (exact.py's contract),
+# so Spark, numpy and DuckDB compute bit-identical buckets —
 # the banding itself is oracle-checkable, not just the re-score.
 EMB_LSH_BANDS = 8
 EMB_LSH_BITS = 6
@@ -701,12 +709,7 @@ def _plane_sign_expr(emb_expr: str, plane: list[float]) -> str:
     48-plane × 64-coefficient tree built via the Column API costs tens of
     thousands of py4j round trips (~5 s of driver time per plan); one
     F.expr per band is ~free."""
-    lits = ", ".join(f"{float(v)!r}D" for v in plane)
-    return (
-        f"aggregate(zip_with({emb_expr}, array({lits}),"
-        f" (x, p) -> CAST(FLOOR(CAST(x AS DOUBLE) * p * 1e12) AS BIGINT)),"
-        f" CAST(0 AS BIGINT), (acc, v) -> acc + v) > 0"
-    )
+    return f"{spark_dot_sql(emb_expr, plane)} > 0"
 
 
 def emb_bucket_cols(emb_expr: str = "embedding") -> list[Column]:
@@ -723,12 +726,7 @@ def emb_bucket_cols(emb_expr: str = "embedding") -> list[Column]:
 
 
 def _sql_plane_sign(emb_expr: str, plane: list[float]) -> str:
-    lits = ", ".join(repr(float(v)) for v in plane)
-    return (
-        f"(SELECT SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-        f" * struct_extract(p, 2) * 1e12) AS BIGINT))"
-        f" FROM UNNEST(list_zip({emb_expr}, [{lits}])) AS t(p)) > 0"
-    )
+    return f"{duck_dot_sql(emb_expr, plane)} > 0"
 
 
 def _sql_bucket(emb_expr: str, band: int) -> str:
@@ -748,16 +746,12 @@ def _emb_cosine_oracle() -> str:
         f"  SELECT vec_id, {b} AS band, eb{b} AS bucket FROM norms"
         for b in range(EMB_LSH_BANDS)
     )
-    dot_ab = (
-        "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-        " * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-        " FROM UNNEST(list_zip(na.embedding, nb.embedding)) AS t(p))"
-    )
+    dot_ab = descale_sql(duck_dot_sql("na.embedding", "nb.embedding"))
+    sq_norm = descale_sql(duck_sq_sql("embedding"))
     return f"""
 WITH norms AS (
   SELECT vec_id,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {sq_norm} AS sq_norm,
          embedding,
          {buckets}
   FROM embeddings
@@ -796,22 +790,20 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Blocking is random-hyperplane LSH (8 bands × 6 sign bits): only pairs
     agreeing on at least one full band's bucket are scored. Both the bucket
-    bits and the pairwise scores are Arrow-batched numpy over exactly the
-    engine-neutral scaled-long folds (``sum(floor(x*p*1e12))`` as int64) —
-    IEEE doubles make floor/multiply bit-identical across numpy, Spark SQL,
-    and DuckDB, so the oracle reproduces the *same blocking* and the same
-    cosines bit-for-bit. Candidate pairs never materialize as Spark rows:
-    scoring happens per (band, bucket) group as one m×m matmul-shaped
-    tensor op (m ≤ EMB_BUCKET_CAP), and only threshold survivors leave the
-    UDF. One wide shuffle total — embeddings travel the wire once per band
-    (8× corpus, linear) instead of once per candidate pair (quadratic in
-    bucket occupancy); survivor pair-dedup and the top-K window shuffle
-    only skinny (vec_a, vec_b, cosine) rows. The interpreted-HOF fold this
-    replaces spent ~60 ns per element-multiply; the numpy path is ~100×
-    cheaper per element and was measured 2.6× faster end-to-end at sf0.1.
-    Recall vs the unblocked all-pairs baseline is asserted in
-    tests/test_dedup.py (banding trades recall for candidate volume;
-    more bands raise recall at linear candidate cost)."""
+    bits and the pairwise scores are Arrow-batched numpy over the guarded
+    scaled-int64 kernel (exact.np_dot_scaled), so the oracle reproduces the
+    *same blocking* and the same cosines bit-for-bit. Candidate pairs never
+    materialize as Spark rows: scoring happens per (band, bucket) group as
+    one m×m matmul-shaped tensor op (m ≤ EMB_BUCKET_CAP), and only threshold
+    survivors leave the UDF. One wide shuffle total — embeddings travel the
+    wire once per band (8× corpus, linear) instead of once per candidate
+    pair (quadratic in bucket occupancy); survivor pair-dedup and the top-K
+    window shuffle only skinny (vec_a, vec_b, cosine) rows. The
+    interpreted-HOF fold this replaces spent ~60 ns per element-multiply;
+    the numpy path is ~100× cheaper per element and was measured 2.6×
+    faster end-to-end at sf0.1. Recall vs the unblocked all-pairs baseline
+    is asserted in tests/test_dedup.py (banding trades recall for candidate
+    volume; more bands raise recall at linear candidate cost)."""
     import numpy as np
     import pandas as pd
 
@@ -832,12 +824,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             for lo in range(0, len(pdf), 512):
                 e = np.stack(pdf["embedding"].iloc[lo : lo + 512].to_numpy())
                 e = e.astype(np.float64)  # CAST(float AS DOUBLE)
-                # identical association to the SQL fold: (x * p) * 1e12
-                sums = (
-                    np.floor((e[:, None, :] * planes[None, :, :]) * 1e12)
-                    .astype(np.int64)
-                    .sum(axis=2)
-                )
+                sums = np_dot_scaled(e[:, None, :], planes[None, :, :])
                 bits = (sums > 0).reshape(-1, EMB_LSH_BANDS, EMB_LSH_BITS)
                 chunks.append((bits * bit_weights[None, None, :]).sum(axis=2))
             buckets = np.concatenate(chunks)
@@ -887,14 +874,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         e = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        # exact pairwise scaled-long dots: floor((a*b)*1e12) summed as int64
-        dint = (
-            np.floor((e[:, None, :] * e[None, :, :]) * 1e12)
-            .astype(np.int64)
-            .sum(axis=2)
-        )
-        sq = dint.diagonal().astype(np.float64) / 1e12
-        num = dint.astype(np.float64) / 1e12
+        # exact pairwise scaled-long dots
+        dint = np_dot_scaled(e[:, None, :], e[None, :, :])
+        sq = np_descale(dint.diagonal())
+        num = np_descale(dint)
         den = np.sqrt(sq)[:, None] * np.sqrt(sq)[None, :]
         cos = num / den
         ia, ib = np.triu_indices(m, k=1)  # i < j over vec_id-sorted rows

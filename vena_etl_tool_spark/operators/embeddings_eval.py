@@ -14,7 +14,7 @@ IVF/PQ recall evals are:
   the truncation mechanics + recall audit on the fixture vectors).
 
 Both stay on the scaled-integer dot-product convention
-(similarity.dot_exact) so every ranking is bit-identical in DuckDB.
+(exact.dot_exact) so every ranking is bit-identical in DuckDB.
 
 Scale: signatures/truncations are map-only projections of the corpus;
 the candidate scans broadcast the ≤N_QUERIES query rows against the
@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..catalog import load_table
 from ..registry import register
 from ._shared import spread_small
-from .similarity import N_QUERIES, TOP_K, dot_exact, with_sq_norm
+from .exact import descale_sql, dot_exact, duck_dot_sql, duck_sq_sql
+from .similarity import N_QUERIES, SQ_NORM_DUCK, TOP_K, with_sq_norm
 
 BQ_RERANK = 50  # hamming candidates kept per query for exact rescoring
 MRL_DIMS = (16, 32)  # truncation prefixes audited against the full 64
@@ -64,23 +65,15 @@ def _sig_half_duck(lo_bit: int) -> str:
     return f"CAST({terms} AS BIGINT)"
 
 
-_DOT_DUCK = (
-    "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-    " * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-    " FROM UNNEST(list_zip({l}, {r})) AS t(p))"
-)
-
-
 def _bq_recall_oracle() -> str:
     from ..registry import REGISTRY
 
     exact_sql = REGISTRY["sim_cosine_topk"].oracle
-    dot = _DOT_DUCK.format(l="q.embedding", r="c.embedding")
+    dot = descale_sql(duck_dot_sql("q.embedding", "c.embedding"))
     return f"""
 WITH sigs AS (
   SELECT vec_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {SQ_NORM_DUCK} AS sq_norm,
          {_sig_half_duck(0)} AS sig_lo,
          {_sig_half_duck(32)} AS sig_hi
   FROM embeddings
@@ -197,20 +190,17 @@ def _mrl_recall_oracle() -> str:
     exact_sql = REGISTRY["sim_cosine_topk"].oracle
     branches = []
     for d in MRL_DIMS:
-        dot = _DOT_DUCK.format(
-            l=f"q.embedding[1:{d}]", r=f"c.embedding[1:{d}]"
-        )
-        nrm = (
-            "(SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE)"
-            " * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-            f" FROM UNNEST({{v}}.embedding[1:{d}]) AS u(x))"
+        dot, nq, nc = (
+            descale_sql(duck_dot_sql(f"q.embedding[1:{d}]", f"c.embedding[1:{d}]")),
+            descale_sql(duck_sq_sql(f"q.embedding[1:{d}]")),
+            descale_sql(duck_sq_sql(f"c.embedding[1:{d}]")),
         )
         branches.append(f"""
   SELECT {d} AS trunc_dims, query_id, neighbor_id FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
            ROW_NUMBER() OVER (
              PARTITION BY q.vec_id
-             ORDER BY {dot} / (SQRT({nrm.format(v="q")}) * SQRT({nrm.format(v="c")})) DESC,
+             ORDER BY {dot} / (SQRT({nq}) * SQRT({nc})) DESC,
                       c.vec_id) AS rk
     FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
     WHERE q.vec_id < {N_QUERIES}

@@ -186,7 +186,8 @@ def sim_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.clustering import KMeans
     from pyspark.sql import Window
 
-    from .similarity import N_QUERIES, TOP_K, dot_exact, with_sq_norm
+    from .exact import dot_exact
+    from .similarity import N_QUERIES, TOP_K, with_sq_norm
 
     emb = with_sq_norm(
         load_table(spark, sf_dir, "embeddings").select(

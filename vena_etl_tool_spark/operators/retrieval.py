@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..catalog import load_table
 from ..registry import register
 from ._shared import spread_small
-from .similarity import dot_exact, with_sq_norm
+from .exact import descale_sql, dot_exact, duck_dot_sql
+from .similarity import SQ_NORM_DUCK, with_sq_norm
 from .textanalysis import _BM25_CTES, BM25_TOP_K, text_bm25_search
 
 # Fixed literal query-id → query-vector mapping: the dense half of each
@@ -48,13 +49,11 @@ WITH {_BM25_CTES}, lex AS (
   VALUES {_QMAP_VALUES}
 ), norms AS (
   SELECT vec_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm
+         {SQ_NORM_DUCK} AS sq_norm
   FROM embeddings
 ), dense_scored AS (
   SELECT m.query_id, c.vec_id AS doc_id,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE) * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(q.embedding, c.embedding)) AS t(p))
+         {descale_sql(duck_dot_sql("q.embedding", "c.embedding"))}
          / (SQRT(q.sq_norm) * SQRT(c.sq_norm)) AS cosine
   FROM qmap m
   JOIN norms q ON q.vec_id = m.qvec
@@ -370,8 +369,7 @@ WITH {_BM25_CTES}, lex AS (
   VALUES {_QMAP_VALUES}
 ), ivf_scored AS (
   SELECT vec_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {SQ_NORM_DUCK} AS sq_norm,
          {{scores}} AS scores,
          list_transform(generate_series(1, {{n_cents}}),
                         i -> {{{{'s': scores[i], 'cid': i - 1}}}}) AS score_structs
@@ -389,8 +387,7 @@ WITH {_BM25_CTES}, lex AS (
                              ORDER BY u.s, u.cid) <= {{nprobe}}
 ), cand AS (
   SELECT p.query_id, c.vec_id AS doc_id,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(pp, 1) AS DOUBLE) * CAST(struct_extract(pp, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(p.q_emb, c.embedding)) AS t(pp))
+         {descale_sql(duck_dot_sql("p.q_emb", "c.embedding"))}
          / (SQRT(p.q_sq) * SQRT(c.sq_norm)) AS cosine
   FROM probes p JOIN ivf_assigned c ON c.cent = p.cent AND c.vec_id <> p.qvec
 ), dense AS (
@@ -663,13 +660,11 @@ WITH {_BM25_CTES}, lex AS (
   VALUES {_QMAP_VALUES}
 ), norms AS (
   SELECT vec_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm
+         {SQ_NORM_DUCK} AS sq_norm
   FROM embeddings
 ), dense_scored AS (
   SELECT m.query_id, c.vec_id AS doc_id,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE) * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(q.embedding, c.embedding)) AS t(p))
+         {descale_sql(duck_dot_sql("q.embedding", "c.embedding"))}
          / (SQRT(q.sq_norm) * SQRT(c.sq_norm)) AS cosine
   FROM qmap m
   JOIN norms q ON q.vec_id = m.qvec

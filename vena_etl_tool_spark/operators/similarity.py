@@ -26,6 +26,19 @@ from ..catalog import load_table
 from ..registry import register
 from ._shared import ckpt as _ckpt
 from ._shared import persisted_artifact, spread_small
+from .exact import (
+    descale,
+    descale_sql,
+    dot_exact,
+    duck_dot_sql,
+    duck_list,
+    duck_sq_sql,
+    np_dot,
+    np_dot_scaled,
+    spark_array,
+    spark_dot_sql,
+    spark_sq_sql,
+)
 
 TOP_K = 5
 N_QUERIES = 20  # vec_id < 20 are the query vectors
@@ -38,31 +51,12 @@ _PLANES = np.random.default_rng(20240613).normal(
 ).astype(np.float64)
 
 
-def dot_exact(l: Column, r: Column) -> Column:  # noqa: E741
-    """Order-insensitive exact dot product of two float arrays.
-
-    Scaled-integer fold: each product is floored at 1e-12 granularity into
-    a LONG, so the sum is exact in any order and bit-identical to the
-    DuckDB oracle (`SUM(CAST(FLOOR(l*r*1e12) AS BIGINT))/1e12`) — same
-    determinism as a DECIMAL fold at ~3.4× less cost (long adds, no
-    BigDecimal). Overflow headroom: |term| ≤ ~2.5e13, 64 terms ≪ 2⁶³;
-    rescale the 1e12 factor for embeddings with larger magnitudes.
-    """
-    return (
-        F.aggregate(
-            F.zip_with(
-                l, r,
-                lambda x, y: F.floor(x.cast("double") * y.cast("double") * F.lit(1e12)).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).cast("double")
-        / F.lit(1e12)
-    )
-
-
 def with_sq_norm(emb: DataFrame) -> DataFrame:
     return emb.withColumn("sq_norm", dot_exact(F.col("embedding"), F.col("embedding")))
+
+
+# DuckDB twin of with_sq_norm's column, for the oracles
+SQ_NORM_DUCK = descale_sql(duck_sq_sql("embedding"))
 
 
 @register(
@@ -71,13 +65,11 @@ def with_sq_norm(emb: DataFrame) -> DataFrame:
     oracle=f"""
 WITH norms AS (
   SELECT vec_id, label, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm
+         {SQ_NORM_DUCK} AS sq_norm
   FROM embeddings
 ), scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, c.label AS neighbor_label,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE) * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(q.embedding, c.embedding)) AS t(p))
+         {descale_sql(duck_dot_sql("q.embedding", "c.embedding"))}
          / (SQRT(q.sq_norm) * SQRT(c.sq_norm)) AS cosine
   FROM norms q JOIN norms c ON c.vec_id <> q.vec_id
   WHERE q.vec_id < {N_QUERIES}
@@ -146,13 +138,7 @@ def lsh_bucket_cols() -> list[Column]:
     for band in range(LSH_BANDS):
         bits = []
         for bit in range(LSH_BITS):
-            plane = _PLANES[band, bit]
-            lits = ", ".join(f"{float(v)!r}D" for v in plane)
-            proj = (
-                f"aggregate(zip_with(embedding, array({lits}),"
-                f" (x, p) -> CAST(FLOOR(CAST(x AS DOUBLE) * p * 1e12) AS BIGINT)),"
-                f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-            )
+            proj = spark_dot_sql("embedding", _PLANES[band, bit])
             bits.append(f"CASE WHEN {proj} > 0 THEN {1 << bit} ELSE 0 END")
         cols.append(F.expr(" + ".join(bits)).alias(f"bucket{band}"))
     return cols
@@ -162,12 +148,7 @@ def _lsh_sql_bucket(band: int) -> str:
     """DuckDB twin of lsh_bucket_cols for one band (bit-identical)."""
     bits = []
     for bit in range(LSH_BITS):
-        lits = ", ".join(repr(float(v)) for v in _PLANES[band, bit])
-        sign = (
-            f"(SELECT SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-            f" * struct_extract(p, 2) * 1e12) AS BIGINT))"
-            f" FROM UNNEST(list_zip(embedding, [{lits}])) AS t(p)) > 0"
-        )
+        sign = f"{duck_dot_sql('embedding', _PLANES[band, bit])} > 0"
         bits.append(f"CASE WHEN {sign} THEN {1 << bit} ELSE 0 END")
     return "(" + " + ".join(bits) + ")"
 
@@ -180,16 +161,11 @@ def _ann_lsh_oracle() -> str:
         f"  SELECT vec_id, {b} AS band, bucket{b} AS bucket FROM norms"
         for b in range(LSH_BANDS)
     )
-    dot_ab = (
-        "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-        " * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-        " FROM UNNEST(list_zip(na.embedding, nb.embedding)) AS t(p))"
-    )
+    dot_ab = descale_sql(duck_dot_sql("na.embedding", "nb.embedding"))
     return f"""
 WITH norms AS (
   SELECT vec_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {SQ_NORM_DUCK} AS sq_norm,
          {buckets}
   FROM embeddings
 ), flat AS (
@@ -372,11 +348,9 @@ _IVF_RAW = np.random.default_rng(20240614).normal(size=(IVF_CENTROIDS, 64))
 _IVF_CENTS = (_IVF_RAW / np.linalg.norm(_IVF_RAW, axis=1, keepdims=True)).astype(
     np.float64
 )
-# Python-computed integer literal per centroid: sum(floor(c*c*1e12)).
-# Embedded identically in both engines' SQL — no cross-engine float risk.
-_IVF_C_SQ = [
-    int(sum(math.floor(float(c) * float(c) * 1e12) for c in row)) for row in _IVF_CENTS
-]
+# Python-computed scaled |c|² literal per centroid, embedded identically
+# in both engines' SQL — no cross-engine float risk.
+_IVF_C_SQ = [int(v) for v in np_dot_scaled(_IVF_CENTS, _IVF_CENTS)]
 
 
 def _ivf_scores_spark() -> str:
@@ -389,12 +363,7 @@ def _ivf_scores_spark() -> str:
     explosion that takes minutes to optimize)."""
     elems = []
     for i in range(IVF_CENTROIDS):
-        lits = ", ".join(f"{float(v)!r}D" for v in _IVF_CENTS[i])
-        dot = (
-            f"aggregate(zip_with(embedding, array({lits}),"
-            f" (x, p) -> CAST(FLOOR(CAST(x AS DOUBLE) * p * 1e12) AS BIGINT)),"
-            f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
+        dot = spark_dot_sql("embedding", _IVF_CENTS[i])
         elems.append(f"CAST({_IVF_C_SQ[i]} AS BIGINT) - 2 * ({dot})")
     return "array(" + ", ".join(elems) + ")"
 
@@ -402,12 +371,7 @@ def _ivf_scores_spark() -> str:
 def _ivf_scores_duck() -> str:
     elems = []
     for i in range(IVF_CENTROIDS):
-        lits = ", ".join(f"{float(v)!r}" for v in _IVF_CENTS[i])
-        dot = (
-            f"CAST(list_sum(list_transform(list_zip(embedding, [{lits}]),"
-            f" p -> CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-            f" * struct_extract(p, 2) * 1e12) AS BIGINT))) AS BIGINT)"
-        )
+        dot = duck_dot_sql("embedding", _IVF_CENTS[i])
         elems.append(f"CAST({_IVF_C_SQ[i]} AS BIGINT) - 2 * {dot}")
     return "[" + ", ".join(elems) + "]"
 
@@ -415,8 +379,7 @@ def _ivf_scores_duck() -> str:
 _IVF_ORACLE = f"""
 WITH scored AS (
   SELECT vec_id, label, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {SQ_NORM_DUCK} AS sq_norm,
          {_ivf_scores_duck()} AS scores,
          list_transform(generate_series(1, {IVF_CENTROIDS}),
                         i -> {{'s': scores[i], 'cid': i - 1}}) AS score_structs
@@ -435,8 +398,7 @@ WITH scored AS (
   ) WHERE prn <= {IVF_NPROBE}
 ), cand AS (
   SELECT p.query_id, c.vec_id AS neighbor_id, c.label AS neighbor_label,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(pp, 1) AS DOUBLE) * CAST(struct_extract(pp, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(p.q_emb, c.embedding)) AS t(pp))
+         {descale_sql(duck_dot_sql("p.q_emb", "c.embedding"))}
          / (SQRT(p.q_sq) * SQRT(c.sq_norm)) AS cosine
   FROM probes p JOIN assigned c ON c.cent = p.cent AND c.vec_id <> p.query_id
 )
@@ -626,8 +588,7 @@ SEM_CLUSTER_CAP = 500
 _SEMANTIC_ORACLE = f"""
 WITH scored AS (
   SELECT vec_id, label, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {SQ_NORM_DUCK} AS sq_norm,
          {{duck_scores}} AS scores
   FROM embeddings
 ), assigned AS (
@@ -642,8 +603,7 @@ WITH scored AS (
 ), close AS (
   SELECT b.vec_id AS b_id, a.vec_id AS a_id
   FROM small a JOIN small b ON a.cent = b.cent AND a.vec_id < b.vec_id
-  WHERE (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE) * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-         FROM UNNEST(list_zip(a.embedding, b.embedding)) AS t(p))
+  WHERE {descale_sql(duck_dot_sql("a.embedding", "b.embedding"))}
         / (SQRT(a.sq_norm) * SQRT(b.sq_norm)) >= {SEM_TAU}
 ), dup AS (
   SELECT b_id, MIN(a_id) AS dup_of, COUNT(*) AS n_close FROM close GROUP BY b_id
@@ -753,15 +713,9 @@ _PQ_RAW = np.random.default_rng(20250814).normal(
     0.0, 0.15, size=(PQ_SUBSPACES, PQ_CODES, PQ_SUBDIM)
 )
 _PQ_BOOKS = _PQ_RAW.astype(np.float64)
-# per (subspace, code): sum(floor(c*c*1e12)) as a Python int literal,
-# embedded identically in both engines' SQL
-_PQ_C_SQ = [
-    [
-        int(sum(math.floor(float(c) * float(c) * 1e12) for c in _PQ_BOOKS[s][k]))
-        for k in range(PQ_CODES)
-    ]
-    for s in range(PQ_SUBSPACES)
-]
+# per (subspace, code): scaled |c|² as a Python int literal, embedded
+# identically in both engines' SQL
+_PQ_C_SQ = [[int(v) for v in row] for row in np_dot_scaled(_PQ_BOOKS, _PQ_BOOKS)]
 
 
 def _pq_scores_spark(s: int, src: str = "embedding") -> str:
@@ -772,12 +726,7 @@ def _pq_scores_spark(s: int, src: str = "embedding") -> str:
     sub = f"slice({src}, {s * PQ_SUBDIM + 1}, {PQ_SUBDIM})"
     elems = []
     for k in range(PQ_CODES):
-        lits = ", ".join(f"{float(v)!r}D" for v in _PQ_BOOKS[s][k])
-        dot = (
-            f"aggregate(zip_with({sub}, array({lits}),"
-            f" (x, p) -> CAST(FLOOR(CAST(x AS DOUBLE) * p * 1e12) AS BIGINT)),"
-            f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
+        dot = spark_dot_sql(sub, _PQ_BOOKS[s][k])
         elems.append(f"CAST({_PQ_C_SQ[s][k]} AS BIGINT) - 2 * ({dot})")
     return "array(" + ", ".join(elems) + ")"
 
@@ -786,12 +735,7 @@ def _pq_scores_duck(s: int, src: str = "embedding") -> str:
     sub = f"{src}[{s * PQ_SUBDIM + 1}:{s * PQ_SUBDIM + PQ_SUBDIM}]"
     elems = []
     for k in range(PQ_CODES):
-        lits = ", ".join(repr(float(v)) for v in _PQ_BOOKS[s][k])
-        dot = (
-            f"CAST(list_sum(list_transform(list_zip({sub}, [{lits}]),"
-            f" p -> CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-            f" * struct_extract(p, 2) * 1e12) AS BIGINT))) AS BIGINT)"
-        )
+        dot = duck_dot_sql(sub, _PQ_BOOKS[s][k])
         elems.append(f"CAST({_PQ_C_SQ[s][k]} AS BIGINT) - 2 * {dot}")
     return "[" + ", ".join(elems) + "]"
 
@@ -806,14 +750,10 @@ def _pq_oracle() -> str:
     )
     # scaled residual per subspace: |x_s|^2 + min_score  (= |x_s - c|^2
     # scaled, since min_score = |c|^2 - 2<x_s,c>)
-    sub_sq = lambda s: (  # noqa: E731 — local SQL fragment helper
-        f"(SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE)"
-        f" * 1e12) AS BIGINT)) AS BIGINT)"
-        f" FROM UNNEST(embedding[{s * PQ_SUBDIM + 1}:{s * PQ_SUBDIM + PQ_SUBDIM}])"
-        f" AS u(x))"
-    )
     err_sum = " + ".join(
-        f"({sub_sq(s)} + list_min(sc{s}))" for s in range(PQ_SUBSPACES)
+        f"({duck_sq_sql(f'embedding[{s * PQ_SUBDIM + 1}:{s * PQ_SUBDIM + PQ_SUBDIM}]')}"
+        f" + list_min(sc{s}))"
+        for s in range(PQ_SUBSPACES)
     )
     return f"""
 WITH scored AS (
@@ -822,7 +762,7 @@ WITH scored AS (
   FROM embeddings
 )
 SELECT vec_id, label, {code_cols},
-       ROUND(CAST(({err_sum}) AS DOUBLE) / 1e12, 6) AS recon_err_sq
+       ROUND({descale_sql(f"({err_sum})")}, 6) AS recon_err_sq
 FROM scored
 """
 
@@ -853,13 +793,10 @@ def embedding_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         *[F.expr(_pq_scores_spark(s)).alias(f"sc{s}") for s in range(PQ_SUBSPACES)],
     )
-    sub_sq = lambda s: (  # noqa: E731 — local SQL fragment helper
-        f"aggregate(transform(slice(embedding, {s * PQ_SUBDIM + 1}, {PQ_SUBDIM}),"
-        f" x -> CAST(FLOOR(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * 1e12) AS BIGINT)),"
-        f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
     err_sum = " + ".join(
-        f"({sub_sq(s)} + array_min(sc{s}))" for s in range(PQ_SUBSPACES)
+        f"({spark_sq_sql(f'slice(embedding, {s * PQ_SUBDIM + 1}, {PQ_SUBDIM})')}"
+        f" + array_min(sc{s}))"
+        for s in range(PQ_SUBSPACES)
     )
     return scored.select(
         "vec_id",
@@ -870,7 +807,7 @@ def embedding_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias(f"code{s}")
             for s in range(PQ_SUBSPACES)
         ],
-        F.round(F.expr(f"CAST(({err_sum}) AS DOUBLE) / 1e12"), 6).alias(
+        F.round(F.expr(descale_sql(f"({err_sum})")), 6).alias(
             "recon_err_sq"
         ),
     )
@@ -1053,11 +990,7 @@ KNN_GRAPH_K = 4
 
 
 def _knn_pair_dot_duck() -> str:
-    return (
-        "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(pp, 1) AS DOUBLE)"
-        " * CAST(struct_extract(pp, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-        " FROM UNNEST(list_zip(a.embedding, b.embedding)) AS t(pp))"
-    )
+    return descale_sql(duck_dot_sql("a.embedding", "b.embedding"))
 
 
 # CTE body shared by the graph and cluster oracles (formatted with
@@ -1067,8 +1000,7 @@ _KNN_GRAPH_CTES = f"""reps AS (
   SELECT embedding, MIN(vec_id) AS vec_id FROM embeddings GROUP BY embedding
 ), scored AS (
   SELECT vec_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {SQ_NORM_DUCK} AS sq_norm,
          {{scores}} AS scores
   FROM reps
 ), assigned AS (
@@ -1323,19 +1255,11 @@ def sim_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_cents_spark() -> str:
-    rows = ", ".join(
-        "array(" + ", ".join(f"{float(v)!r}D" for v in _IVF_CENTS[i]) + ")"
-        for i in range(IVF_CENTROIDS)
-    )
-    return f"array({rows})"
+    return "array(" + ", ".join(spark_array(c) for c in _IVF_CENTS) + ")"
 
 
 def _ivf_cents_duck() -> str:
-    rows = ", ".join(
-        "[" + ", ".join(repr(float(v)) for v in _IVF_CENTS[i]) + "]"
-        for i in range(IVF_CENTROIDS)
-    )
-    return f"[{rows}]"
+    return "[" + ", ".join(duck_list(c) for c in _IVF_CENTS) + "]"
 
 
 # residual of `vec` w.r.t. centroid index column `cent` (0-based)
@@ -1353,14 +1277,8 @@ def _residual_duck(vec: str, cent: str) -> str:
     )
 
 
-_TERM0_SPARK = (
-    "aggregate(transform(q_res, r -> CAST(FLOOR(r * r * 1e12) AS BIGINT)),"
-    " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-)
-_TERM0_DUCK = (
-    "CAST(list_sum(list_transform(q_res,"
-    " r -> CAST(FLOOR(r * r * 1e12) AS BIGINT))) AS BIGINT)"
-)
+_TERM0_SPARK = spark_sq_sql("q_res")
+_TERM0_DUCK = duck_sq_sql("q_res")
 
 
 def _ivfadc_oracle() -> str:
@@ -1616,26 +1534,16 @@ _RP_MAT = (_RP_RAW / math.sqrt(RP_DIM)).astype(np.float64)
 
 
 def _rp_dot_spark(j: int, src: str = "embedding") -> str:
-    lits = ", ".join(f"{float(v)!r}D" for v in _RP_MAT[j])
-    return (
-        f"aggregate(zip_with({src}, array({lits}),"
-        f" (x, p) -> CAST(FLOOR(CAST(x AS DOUBLE) * p * 1e12) AS BIGINT)),"
-        f" CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
+    return spark_dot_sql(src, _RP_MAT[j])
 
 
 def _rp_dot_duck(j: int, src: str = "embedding") -> str:
-    lits = ", ".join(repr(float(v)) for v in _RP_MAT[j])
-    return (
-        f"CAST(list_sum(list_transform(list_zip({src}, [{lits}]),"
-        f" p -> CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-        f" * struct_extract(p, 2) * 1e12) AS BIGINT))) AS BIGINT)"
-    )
+    return duck_dot_sql(src, _RP_MAT[j])
 
 
 _RP_ORACLE = f"""
 SELECT vec_id, label,
-       {", ".join(f"ROUND(CAST({_rp_dot_duck(j)} AS DOUBLE) / 1e12, 6) AS p{j}" for j in range(RP_DIM))}
+       {", ".join(f"ROUND({descale_sql(_rp_dot_duck(j))}, 6) AS p{j}" for j in range(RP_DIM))}
 FROM embeddings
 """
 
@@ -1658,9 +1566,7 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         *[
-            F.round(
-                F.expr(_rp_dot_spark(j)).cast("double") / F.lit(1e12), 6
-            ).alias(f"p{j}")
+            F.round(descale(F.expr(_rp_dot_spark(j))), 6).alias(f"p{j}")
             for j in range(RP_DIM)
         ],
     )
@@ -1668,7 +1574,7 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rp_audit_pairs_duck() -> str:
     proj_cols = ",\n         ".join(
-        f"CAST({_rp_dot_duck(j)} AS DOUBLE) / 1e12 AS y{j}" for j in range(RP_DIM)
+        f"{descale_sql(_rp_dot_duck(j))} AS y{j}" for j in range(RP_DIM)
     )
     d2_proj = " + ".join(
         f"CAST(FLOOR((a.y{j} - b.y{j}) * (a.y{j} - b.y{j}) * 1e9) AS BIGINT)"
@@ -1716,7 +1622,7 @@ def embedding_rp_distance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         *[
-            (F.expr(_rp_dot_spark(j)).cast("double") / F.lit(1e12)).alias(f"y{j}")
+            descale(F.expr(_rp_dot_spark(j))).alias(f"y{j}")
             for j in range(RP_DIM)
         ],
     )
@@ -2138,8 +2044,7 @@ SWEEP_LEVELS = (1, 2, 4, 8)  # nprobe levels; IVF_NPROBE=2 is the prod point
 _SWEEP_ORACLE = f"""
 WITH scored AS (
   SELECT vec_id, label, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm,
+         {SQ_NORM_DUCK} AS sq_norm,
          {_ivf_scores_duck()} AS scores,
          list_transform(generate_series(1, {IVF_CENTROIDS}),
                         i -> {{'s': scores[i], 'cid': i - 1}}) AS score_structs
@@ -2161,8 +2066,7 @@ WITH scored AS (
   VALUES {", ".join(f"({v})" for v in SWEEP_LEVELS)}
 ), cand AS (
   SELECT l.nprobe, p.query_id, c.vec_id AS neighbor_id,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(pp, 1) AS DOUBLE) * CAST(struct_extract(pp, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(list_zip(p.q_emb, c.embedding)) AS t(pp))
+         {descale_sql(duck_dot_sql("p.q_emb", "c.embedding"))}
          / (SQRT(p.q_sq) * SQRT(c.sq_norm)) AS cosine
   FROM levels l
   JOIN probes p ON p.prn <= l.nprobe
@@ -2178,8 +2082,7 @@ WITH scored AS (
   FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
            ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY
-             (SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE) * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-              FROM UNNEST(list_zip(q.embedding, c.embedding)) AS t(p))
+             {descale_sql(duck_dot_sql("q.embedding", "c.embedding"))}
              / (SQRT(q.sq_norm) * SQRT(c.sq_norm)) DESC, c.vec_id) AS rk
     FROM scored q JOIN scored c ON c.vec_id <> q.vec_id
     WHERE q.vec_id < {N_QUERIES}
@@ -2724,11 +2627,7 @@ WALK_HOPS = 4
 
 
 def _walk_cos_duck(q: str, s: str) -> str:
-    dot = (
-        "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(wp, 1) AS DOUBLE)"
-        " * CAST(struct_extract(wp, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-        f" FROM UNNEST(list_zip({q}.embedding, {s}.embedding)) AS t(wp))"
-    )
+    dot = descale_sql(duck_dot_sql(f"{q}.embedding", f"{s}.embedding"))
     return f"{dot} / (SQRT({q}.sq_norm) * SQRT({s}.sq_norm))"
 
 
@@ -2761,8 +2660,7 @@ WITH {_KNN_GRAPH_CTES}, bidir AS (
   SELECT MIN(src) AS node FROM bidir
 ), qv AS (
   SELECT vec_id AS query_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm
+         {SQ_NORM_DUCK} AS sq_norm
   FROM embeddings WHERE vec_id < {N_QUERIES}
 ), walk0 AS (
   SELECT q.query_id, e.node AS cur FROM qv q, entry e
@@ -2992,29 +2890,10 @@ MAXSIM_SUBV = 4  # sub-vectors per embedding (64 dims -> 4 x 16)
 MAXSIM_DIM = 16
 
 
-def _np_dot_floor(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
-    """Row-wise dot_exact over (n, MAXSIM_DIM) float64 blocks — bit-identical
-    to the SQL fold: (x*y)*1e12 elementwise left-assoc in float64, floor
-    (|terms| ≤ ~2.5e13 < 2^53 so floor and the int64 cast are exact), int64
-    row-sum (exact in any order), cast back (≤ 16·2.5e13 < 2^53, exactly
-    representable), divide by 1e12.
-
-    The |term| < 2^53 bound is checked, not assumed: past it numpy's int64
-    cast wraps where the JVM's saturates, so data that breaks the contract
-    (or NaN/inf) raises instead of silently changing the hash."""
-    terms = np.floor((a * b) * 1e12)
-    if not np.all(np.abs(terms) < 2.0**53):
-        raise ValueError(
-            "dot_exact contract broken: a scaled term has |x*y*1e12| >= 2^53 "
-            "(or is NaN/inf); rescale the 1e12 factor for these magnitudes"
-        )
-    return terms.astype(np.int64).sum(axis=1).astype(np.float64) / 1e12
-
-
 def _maxsim_np_score(q: "np.ndarray", c: "np.ndarray") -> "np.ndarray":
     """MaxSim score per row pair, (n, 64) × (n, 64) → (n,) float64:
     Σ_qi max_cj dot(q_qi, c_cj) / (|q_qi|·|c_cj|). Every step mirrors the
-    JVM/DuckDB expression bit for bit: dot_exact via _np_dot_floor, IEEE
+    JVM/DuckDB expression bit for bit: dot_exact via exact.np_dot, IEEE
     sqrt for the norms, division in the same (dot / (qn * cn)) shape,
     GREATEST = plain max (associative and exact for the finite scores
     these norms produce; no zero-norm sub-vector exists — embeddings are
@@ -3023,7 +2902,7 @@ def _maxsim_np_score(q: "np.ndarray", c: "np.ndarray") -> "np.ndarray":
     order, never np.sum (pairwise summation would re-associate floats)."""
     c_norms = [
         np.sqrt(
-            _np_dot_floor(
+            np_dot(
                 c[:, cj * MAXSIM_DIM : (cj + 1) * MAXSIM_DIM],
                 c[:, cj * MAXSIM_DIM : (cj + 1) * MAXSIM_DIM],
             )
@@ -3033,11 +2912,11 @@ def _maxsim_np_score(q: "np.ndarray", c: "np.ndarray") -> "np.ndarray":
     score = None
     for qi in range(MAXSIM_SUBV):
         qs = q[:, qi * MAXSIM_DIM : (qi + 1) * MAXSIM_DIM]
-        qn = np.sqrt(_np_dot_floor(qs, qs))
+        qn = np.sqrt(np_dot(qs, qs))
         best = None
         for cj in range(MAXSIM_SUBV):
             cs = c[:, cj * MAXSIM_DIM : (cj + 1) * MAXSIM_DIM]
-            cos = _np_dot_floor(qs, cs) / (qn * c_norms[cj])
+            cos = np_dot(qs, cs) / (qn * c_norms[cj])
             best = cos if best is None else np.maximum(best, cos)
         score = best if score is None else score + best
     return score
@@ -3062,27 +2941,28 @@ def _maxsim_kernel_udf():
     return F.pandas_udf(_maxsim_series, "double")
 
 
-def _maxsim_duck() -> str:
-    def dot(l: str, r: str) -> str:
-        return (
-            "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-            " * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-            f" FROM UNNEST(list_zip({l}, {r})) AS t(p))"
-        )
-
+def _maxsim_duck_parts() -> tuple[list[str], str]:
+    """DuckDB MaxSim pieces shared by both MaxSim oracles: the sub-vector
+    (s{i}) and norm (n{i}) select items of one embedding, and the score
+    of pair (q, c) over those columns."""
     subs = []
     for s in range(MAXSIM_SUBV):
         lo, hi = s * MAXSIM_DIM + 1, (s + 1) * MAXSIM_DIM
         sv = f"embedding[{lo}:{hi}]"
-        subs.append(f"{sv} AS s{s}, SQRT({dot(sv, sv)}) AS n{s}")
+        subs.append(f"{sv} AS s{s}, SQRT({descale_sql(duck_sq_sql(sv))}) AS n{s}")
     maxes = []
     for qi in range(MAXSIM_SUBV):
         cos = [
-            f"({dot(f'q.s{qi}', f'c.s{cj}')} / (q.n{qi} * c.n{cj}))"
+            f"({descale_sql(duck_dot_sql(f'q.s{qi}', f'c.s{cj}'))}"
+            f" / (q.n{qi} * c.n{cj}))"
             for cj in range(MAXSIM_SUBV)
         ]
         maxes.append("GREATEST(" + ", ".join(cos) + ")")
-    score = " + ".join(maxes)  # left-assoc, same order as the Spark expr
+    return subs, " + ".join(maxes)  # left-assoc, same order as the Spark expr
+
+
+def _maxsim_duck() -> str:
+    subs, score = _maxsim_duck_parts()
     return f"""
 WITH subv AS (
   SELECT vec_id, label, {", ".join(subs)} FROM embeddings
@@ -3159,26 +3039,7 @@ def sim_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _maxsim_plaid_duck() -> str:
-    def dot(l: str, r: str) -> str:
-        return (
-            "(SELECT CAST(SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)"
-            " * CAST(struct_extract(p, 2) AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12"
-            f" FROM UNNEST(list_zip({l}, {r})) AS t(p))"
-        )
-
-    subs = []
-    for s in range(MAXSIM_SUBV):
-        lo, hi = s * MAXSIM_DIM + 1, (s + 1) * MAXSIM_DIM
-        sv = f"embedding[{lo}:{hi}]"
-        subs.append(f"{sv} AS s{s}, SQRT({dot(sv, sv)}) AS n{s}")
-    maxes = []
-    for qi in range(MAXSIM_SUBV):
-        cos = [
-            f"({dot(f'q.s{qi}', f'c.s{cj}')} / (q.n{qi} * c.n{cj}))"
-            for cj in range(MAXSIM_SUBV)
-        ]
-        maxes.append("GREATEST(" + ", ".join(cos) + ")")
-    score = " + ".join(maxes)
+    subs, score = _maxsim_duck_parts()
     return f"""
 WITH scored AS (
   SELECT vec_id, label, embedding,
@@ -3933,8 +3794,7 @@ WITH {{ctes}}, l1nodes AS (
   SELECT MIN(vec_id) AS node FROM l1nodes
 ), qv AS (
   SELECT vec_id AS query_id, embedding,
-         (SELECT CAST(SUM(CAST(FLOOR(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-          FROM UNNEST(embedding) AS u(x)) AS sq_norm
+         {SQ_NORM_DUCK} AS sq_norm
   FROM embeddings WHERE vec_id < {N_QUERIES}
 ), w1_0 AS (
   SELECT q.query_id, e.node AS cur FROM qv q, l1entry e

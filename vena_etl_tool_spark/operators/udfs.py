@@ -22,6 +22,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..catalog import load_table
 from ..registry import register
+from .exact import descale_sql, duck_dot_sql, np_dot
 
 
 @register(
@@ -173,41 +174,31 @@ def udf_sql_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PROBE_LITS = ", ".join(repr(i / 64.0) for i in range(64))
+_PROBE = np.arange(64, dtype=np.float64) / 64.0
 
 
 @register(
     "udf_arrow_python",
     tags=("udf",),
     oracle=f"""
-SELECT vec_id,
-       CAST((SELECT SUM(CAST(FLOOR(CAST(struct_extract(p, 1) AS DOUBLE)
-                                   * struct_extract(p, 2) * 1e12) AS BIGINT))
-             FROM UNNEST(list_zip(embedding, [{_PROBE_LITS}])) AS t(p))
-            AS DOUBLE) / 1e12 AS probe_dot
+SELECT vec_id, {descale_sql(duck_dot_sql("embedding", _PROBE))} AS probe_dot
 FROM embeddings
 """,
 )
 def udf_arrow_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-optimized scalar UDF computing a dot product against a fixed
     probe vector — the shape ANN scoring uses when built-ins won't do.
-    Oracle-exact (r4 → r5 conversion) via the engine-neutral scaled-long
-    fold proven on dedup_embedding_cosine: each term is
-    floor((x_i * p_i) * 1e12) as int64 (probe values i/64 are exact
-    binary fractions; terms ≤ 1e12, 64-term sum ≤ 6.4e13 — no overflow,
-    no FP merge-order hazard), and the final /1e12 of an
-    exactly-representable int is IEEE-identical in numpy, Spark and
-    DuckDB. The numpy path stays fully vectorized — one (n,64) tensor op
-    per Arrow batch."""
-    probe = np.arange(64, dtype=np.float64) / 64.0
+    Oracle-exact (r4 → r5 conversion) via the scaled-int64 dot of
+    exact.py: the guarded numpy kernel here, its DuckDB twin in the oracle.
+    The probe values i/64 are exact binary fractions. The numpy path stays
+    fully vectorized — one (n,64) tensor op per Arrow batch."""
 
     @pandas_udf("double")
     def dot_probe(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:  # np.stack rejects an empty Arrow batch
             return pd.Series(dtype="float64")
         e = np.stack(vecs.to_numpy()).astype(np.float64)  # float32 widen, exact
-        scaled = np.floor((e * probe[None, :]) * 1e12).astype(np.int64).sum(axis=1)
-        return pd.Series(scaled.astype(np.float64) / 1e12)
+        return pd.Series(np_dot(e, _PROBE))
 
     emb = load_table(spark, sf_dir, "embeddings")
     return emb.select("vec_id", dot_probe("embedding").alias("probe_dot"))
