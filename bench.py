@@ -36,10 +36,14 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from vena_etl_tool_spark.registry import all_specs
+from pyspark.sql import DataFrame
+
+from vena_etl_tool_spark.registry import QuerySpec, all_specs
 from vena_etl_tool_spark.session import get_spark
 
 HEADLINE = [
@@ -417,8 +421,51 @@ def canary_normalized_regressions(
     return regression_report(timings, canary, prev_q, prev_canary)
 
 
-def materialize(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
+def run_timed(spark, group: str, build: Callable[[], DataFrame]) -> float:
+    """Build a query's DataFrame and write it to the noop sink (full
+    execution, no driver collect); return the seconds of build plus write.
+    Every job the run launches carries Spark job group ``group``, set
+    before the timed window and cleared afterwards even when ``build`` or
+    the write raises. The only place a bench or tool query run is timed."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        start = time.perf_counter()
+        build().write.mode("overwrite").format("noop").save()
+        return time.perf_counter() - start
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def time_passes(
+    spark, specs: dict[str, QuerySpec], names: list[str], sf_dir: str, passes: int
+) -> tuple[dict[str, float], dict[str, str], list[float]]:
+    """Time ``names`` at ``sf_dir`` over ``passes`` passes; return the
+    per-query min, the errors and each pass's total. A query that throws
+    is recorded once, dropped from the mins and skipped in later passes;
+    the pass it fails in and every later pass total leave it out — one
+    broken query must not take out the whole bench line (the r2 failure
+    mode)."""
+    timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    pass_totals: list[float] = []
+    for i in range(passes):
+        pass_total = 0.0
+        for name in names:
+            if name in errors:
+                continue
+            build = partial(specs[name].fn, spark, sf_dir)
+            try:
+                t = round(run_timed(spark, f"bench:{name}:pass{i}", build), 3)
+            except Exception as exc:
+                errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+                print(f"BENCH FAIL {name}: {errors[name]}", file=sys.stderr)
+                timings.pop(name, None)
+                continue
+            pass_total += t
+            timings[name] = min(t, timings.get(name, t))
+        pass_totals.append(round(pass_total, 3))
+    return timings, errors, pass_totals
 
 
 def run_canary(spark) -> float:
@@ -428,17 +475,17 @@ def run_canary(spark) -> float:
     of the HOST shows up here; a code regression does not."""
     from pyspark.sql import functions as F
 
-    best = float("inf")
-    for _ in range(3):
-        start = time.perf_counter()
-        materialize(
+    def build():
+        return (
             spark.range(10_000_000)
             .select((F.col("id") % 997).alias("k"), F.col("id").alias("v"))
             .groupBy("k")
             .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
         )
-        best = min(best, time.perf_counter() - start)
-    return round(best, 3)
+
+    return round(
+        min(run_timed(spark, f"canary:pass{i}", build) for i in range(3)), 3
+    )
 
 
 def main() -> int:
@@ -454,7 +501,9 @@ def main() -> int:
     if os.path.isdir(warmup_dir) and warmup_dir != sf_dir:
         for name in HEADLINE:
             try:
-                materialize(specs[name].fn(spark, warmup_dir))
+                run_timed(
+                    spark, f"warmup:{name}", partial(specs[name].fn, spark, warmup_dir)
+                )
             except Exception as exc:  # surface early — a broken query would
                 # otherwise crash mid-timed-pass with no warmup breadcrumb
                 print(f"WARMUP FAIL {name}: {exc}", file=sys.stderr)
@@ -465,51 +514,17 @@ def main() -> int:
     # the line also records per-pass totals and loadavg — if the passes
     # disagree or loadavg is high, the artifact itself shows the run was
     # load-contaminated rather than a code regression.
-    # A query that throws is recorded and skipped — one broken query must
-    # not take out the whole bench line (the r2 failure mode).
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    pass_totals: list[float] = []
     load_before = os.getloadavg()[0]
-    for _ in range(3):
-        pass_total = 0.0
-        for name in HEADLINE:
-            if name in errors:
-                continue
-            start = time.perf_counter()
-            try:
-                materialize(specs[name].fn(spark, sf_dir))
-            except Exception as exc:
-                errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-                print(f"BENCH FAIL {name}: {errors[name]}", file=sys.stderr)
-                timings.pop(name, None)
-                continue
-            t = round(time.perf_counter() - start, 3)
-            pass_total += t
-            if name not in timings or t < timings[name]:
-                timings[name] = t
-        pass_totals.append(round(pass_total, 3))
+    timings, errors, pass_totals = time_passes(spark, specs, HEADLINE, sf_dir, 3)
 
     canary = run_canary(spark)
 
     # Fixture-scale side measurements (VERDICT r10 #8): queries excluded
-    # from HEADLINE by cost policy still get a per-round sf0.1 perf row,
-    # timed ONCE (not 3 passes) and recorded separately so they never
-    # distort the headline metric or the cross-round subset totals —
-    # dedup_ml_minhash_stratum alone costs more at sf0.1 than the entire
-    # 152-query headline sweep (186 s vs ~172 s, r11 probe). Opt out with
-    # SPARK_GRAFT_SIDE=0 for quick local iterations.
-    side_timings: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_SIDE", "1") != "0":
-        for name in SIDE_QUERIES:
-            start = time.perf_counter()
-            try:
-                materialize(specs[name].fn(spark, sf_dir))
-            except Exception as exc:
-                errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-                print(f"BENCH FAIL {name}: {errors[name]}", file=sys.stderr)
-                continue
-            side_timings[name] = round(time.perf_counter() - start, 3)
+    # from HEADLINE by cost policy still get a per-round perf row, timed
+    # ONCE (not 3 passes) and recorded separately so they never distort
+    # the headline metric or the cross-round subset totals.
+    side_timings, side_errors, _ = time_passes(spark, specs, SIDE_QUERIES, sf_dir, 1)
+    errors.update(side_errors)
 
     total = round(sum(timings.values()), 3)
     slowest = dict(

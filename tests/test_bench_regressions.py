@@ -1,5 +1,7 @@
-"""Synthetic tests for bench.py's cross-round regression detector
-(VERDICT r9 #4). No Spark needed — regression_report is pure arithmetic.
+"""Tests for bench.py: the cross-round regression detector (VERDICT r9 #4,
+pure arithmetic, no Spark), the one timed query run ``run_timed`` and the
+pass loop ``time_passes``, plus a scan that keeps the timed noop write
+in one place.
 
 The two hard cases the median-adjusted rule must separate:
 - a REAL regression on a host that got faster (raw ratio ~1.0 — the old
@@ -11,6 +13,15 @@ The two hard cases the median-adjusted rule must separate:
 
 import importlib.util
 import os
+import pathlib
+import re
+import time
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from vena_etl_tool_spark.registry import QuerySpec
 
 _spec = importlib.util.spec_from_file_location(
     "bench", os.path.join(os.path.dirname(__file__), "..", "bench.py")
@@ -129,3 +140,96 @@ def test_round_inference_never_reuses_an_existing_round(tmp_path, monkeypatch):
     assert inferred not in existing
     monkeypatch.setenv("SPARK_GRAFT_ROUND", "r99")
     assert bench._infer_round() == "r99"
+
+
+# --- run_timed / time_passes ------------------------------------------------
+
+
+def _fence(spark) -> list[int]:
+    """Run one job in a fresh group and wait until the status tracker (fed
+    by the asynchronous listener bus) shows it; every earlier job is then
+    visible too. Returns the fence's job ids."""
+    sc = spark.sparkContext
+    group = f"fence-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    status = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not status.getJobIdsForGroup(group):
+        assert time.monotonic() < deadline, "fence job never reached the tracker"
+        time.sleep(0.05)
+    return status.getJobIdsForGroup(group)
+
+
+def test_run_timed_tags_exactly_its_own_jobs(spark):
+    sc = spark.sparkContext
+    status = sc.statusTracker()
+    group = f"run-timed-{uuid.uuid4().hex}"
+
+    before = _fence(spark)
+    secs = bench.run_timed(
+        spark, group, lambda: spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    )
+    spark.range(3).collect()  # a job after the call
+    after = _fence(spark)
+
+    assert secs > 0
+    grouped = set(status.getJobIdsForGroup(group))
+    later = [j for j in range(max(before) + 1, min(after)) if j not in grouped]
+    assert grouped and later
+    # job ids are sequential: the call's jobs are exactly the group's
+    assert grouped == set(range(max(before) + 1, min(later)))
+    assert set(later) <= set(status.getJobIdsForGroup(None))
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
+@pytest.mark.parametrize("fails_in", ["build", "write"])
+def test_run_timed_propagates_failure_and_clears_group(spark, fails_in):
+    def build():
+        if fails_in == "build":
+            raise ZeroDivisionError("boom")
+        return spark.range(1).select(F.raise_error(F.lit("boom")))
+
+    with pytest.raises(Exception, match="boom"):
+        bench.run_timed(spark, f"run-timed-fail-{uuid.uuid4().hex}", build)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_time_passes_keeps_min_and_drops_a_failing_query(spark, capsys):
+    calls = {"ok": 0, "bad": 0}
+
+    def ok(spark, sf_dir):
+        calls["ok"] += 1
+        return spark.range(100)
+
+    def bad(spark, sf_dir):
+        calls["bad"] += 1
+        raise RuntimeError("broken")
+
+    specs = {"bad": QuerySpec("bad", bad, None), "ok": QuerySpec("ok", ok, None)}
+    timings, errors, totals = bench.time_passes(spark, specs, ["bad", "ok"], "-", 3)
+
+    assert calls == {"ok": 3, "bad": 1}  # the failure is not retried
+    assert errors == {"bad": "RuntimeError: broken"}
+    assert "BENCH FAIL bad" in capsys.readouterr().err
+    assert set(timings) == {"ok"}
+    # each pass total is "ok"'s time alone, so the kept time is their min
+    assert len(totals) == 3 and timings["ok"] == min(totals)
+
+
+def test_one_timed_noop_write():
+    """The noop-sink write lives only in ``bench.run_timed``: bench.py
+    spells it once, no tool spells it, and no tool tags jobs with its
+    own descriptions (``run_timed`` sets the job group)."""
+    root = pathlib.Path(__file__).resolve().parent.parent
+    noop = re.compile(r"""\.format\(\s*["']noop["']\s*\)""")
+    assert len(noop.findall((root / "bench.py").read_text())) == 1
+    offenders = [
+        str(path.relative_to(root))
+        for path in sorted((root / "tools").rglob("*.py"))
+        if noop.search(path.read_text()) or "setJobDescription" in path.read_text()
+    ]
+    assert offenders == []

@@ -1,16 +1,17 @@
 """Bench-conditions A/B harness (OPTIMIZATION r12, VERDICT r11 item 2).
 
-r11's process failure: `tools/opt_measure.py` (fresh session, sf0.001
-warmup, min-of-3) approved commit d7247bb, which then REGRESSED under
-`bench.py` conditions — the bench runs all 177 headline queries in ONE
-session, so shared artifacts/caches make replaying a subtree far cheaper
-there than in a fresh session, flipping checkpoint trade-offs.
+r11's process failure: a fresh-session timing (sf0.001 warmup, min-of-3)
+approved commit d7247bb, which then REGRESSED under `bench.py` conditions
+— the bench runs all 177 headline queries in ONE session, so shared
+artifacts/caches make replaying a subtree far cheaper there than in a
+fresh session, flipping checkpoint trade-offs.
 
 This tool reproduces the bench's steady-state posture without editing
 bench.py: one full headline pass at $SPARK_GRAFT_SF_DIR (pass 1 absorbs
 artifact builds and JIT, exactly like the bench), then min-of-N timing of
 ONLY the named queries. Numbers are comparable to BENCH_DETAIL per-query
-rows (both are steady-state-with-shared-artifacts), NOT to opt_measure.
+rows (both are steady-state-with-shared-artifacts, timed by
+`bench.run_timed`). `--skip-warm-sweep` gives the fresh-session timing.
 
     python tools/bench_ab.py [--passes 5] [--skip-warm-sweep] q [q ...]
 """
@@ -20,11 +21,11 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, materialize  # noqa: E402
+from bench import HEADLINE, run_timed  # noqa: E402
 from vena_etl_tool_spark.registry import all_specs  # noqa: E402
 from vena_etl_tool_spark.session import get_spark  # noqa: E402
 
@@ -54,26 +55,20 @@ def main() -> int:
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
         for name in args.queries:
-            materialize(specs[name].fn(spark, warm_dir))
+            run_timed(spark, f"warmup:{name}", partial(specs[name].fn, spark, warm_dir))
     if not args.skip_warm_sweep:
-        t0 = time.perf_counter()
-        for name in HEADLINE:
-            spark.sparkContext.setJobDescription(f"warmsweep:{name}")
-            materialize(specs[name].fn(spark, sf_dir))
-        print(
-            f"warm sweep: {time.perf_counter() - t0:.1f}s over "
-            f"{len(HEADLINE)} queries",
-            flush=True,
+        swept = sum(
+            run_timed(spark, f"warmsweep:{name}", partial(specs[name].fn, spark, sf_dir))
+            for name in HEADLINE
         )
+        print(f"warm sweep: {swept:.1f}s over {len(HEADLINE)} queries", flush=True)
 
     for name in args.queries:
-        times = []
-        for i in range(args.passes):
-            spark.sparkContext.setJobDescription(f"ab:{name}:pass{i}")
-            start = time.perf_counter()
-            materialize(specs[name].fn(spark, sf_dir))
-            times.append(round(time.perf_counter() - start, 3))
-        spark.sparkContext.setJobDescription(None)
+        build = partial(specs[name].fn, spark, sf_dir)
+        times = [
+            round(run_timed(spark, f"ab:{name}:pass{i}", build), 3)
+            for i in range(args.passes)
+        ]
         srt = sorted(times)
         print(
             f"{name}: min={srt[0]:.3f}s median={srt[len(srt) // 2]:.3f}s"

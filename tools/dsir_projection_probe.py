@@ -20,6 +20,7 @@ import shutil
 import sys
 import tempfile
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,6 +34,7 @@ from vena_etl_tool_spark.operators.textanalysis import (  # noqa: E402
     dsir_importance_weights,
 )
 from vena_etl_tool_spark.session import get_spark  # noqa: E402
+from tools.scale_check import build_replica, steady_seconds  # noqa: E402
 
 
 def dsir_from_projection(spark, proj_path: str):
@@ -72,23 +74,16 @@ def dsir_from_projection(spark, proj_path: str):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     replicas = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    os.environ["SPARK_GRAFT_REPLICAS"] = str(replicas)
-    from tools.scale_check import build_replica  # noqa: E402  (reuses knob)
-
     spark = get_spark("dsir-probe")
     out_dir = tempfile.mkdtemp(prefix="dsirprobe_")
     try:
-        build_replica(spark, sf_dir, out_dir)
+        build_replica(spark, sf_dir, out_dir, replicas)
         proj_path = os.path.join(out_dir, "_dsir_projection")
 
-        def noop(df):
-            df.write.mode("overwrite").format("noop").save()
-
         # registered two-pass query on the replica (steady state)
-        noop(dsir_importance_weights(spark, out_dir))
-        t0 = time.perf_counter()
-        noop(dsir_importance_weights(spark, out_dir))
-        two_pass = time.perf_counter() - t0
+        two_pass = steady_seconds(
+            spark, "dsir:two_pass", partial(dsir_importance_weights, spark, out_dir)
+        )
 
         # one-time projection write (the explode+md5, once)
         docs = load_table(spark, out_dir, "documents")
@@ -106,10 +101,9 @@ def main() -> int:
         write_cost = time.perf_counter() - t0
 
         # scoring from the persisted projection (steady state)
-        noop(dsir_from_projection(spark, proj_path))
-        t0 = time.perf_counter()
-        noop(dsir_from_projection(spark, proj_path))
-        from_proj = time.perf_counter() - t0
+        from_proj = steady_seconds(
+            spark, "dsir:from_projection", partial(dsir_from_projection, spark, proj_path)
+        )
 
         # sanity: identical weights
         a = dsir_importance_weights(spark, out_dir)

@@ -24,10 +24,9 @@ import os
 import shutil
 import sys
 import tempfile
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import Window  # noqa: E402
@@ -41,6 +40,7 @@ from vena_etl_tool_spark.operators.similarity import (  # noqa: E402
     with_sq_norm,
 )
 from vena_etl_tool_spark.session import get_spark  # noqa: E402
+from tools.scale_check import build_replica, steady_seconds  # noqa: E402
 
 
 def probe_topk(spark, sf_dir: str, n_centroids: int):
@@ -82,36 +82,26 @@ def probe_topk(spark, sf_dir: str, n_centroids: int):
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= TOP_K)
 
 
-def timed(df) -> float:
-    df.write.mode("overwrite").format("noop").save()  # warm
-    t0 = time.perf_counter()
-    df.write.mode("overwrite").format("noop").save()
-    return time.perf_counter() - t0
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     replicas = int(sys.argv[2]) if len(sys.argv) > 2 else 100
-    os.environ["SPARK_GRAFT_REPLICAS"] = str(replicas)
-    from scale_check import build_replica  # late: picks up the env override
-
     spark = get_spark("ivf-occupancy-probe")
     n_base = load_table(spark, sf_dir, "embeddings").count()
     out_dir = tempfile.mkdtemp(prefix="ivfocc_")
     try:
-        build_replica(spark, sf_dir, out_dir)
+        build_replica(spark, sf_dir, out_dir, replicas)
         print(f"| corpus | C (centroids) | occupancy n/C | scan sec |")
         print("|---|---|---|---|")
         # fixed corpus, growing C: cost should fall ~linearly with occupancy
         for c in (16, 16 * replicas):
-            t = timed(probe_topk(spark, out_dir, c))
+            t = steady_seconds(spark, f"ivf:C{c}", partial(probe_topk, spark, out_dir, c))
             print(
                 f"| {replicas}x ({n_base * replicas}) | {c} "
                 f"| {n_base * replicas // c} | {t:.2f} |"
             )
         # the rule itself: C grows WITH the corpus -> same occupancy,
         # ~same cost at 1x and at {replicas}x
-        t = timed(probe_topk(spark, sf_dir, 16))
+        t = steady_seconds(spark, "ivf:1x:C16", partial(probe_topk, spark, sf_dir, 16))
         print(f"| 1x ({n_base}) | 16 | {n_base // 16} | {t:.2f} |")
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)

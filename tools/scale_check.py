@@ -6,7 +6,9 @@ blocking (LSH buckets, shingle inverted index, IVF cells) should keep the
 10x/1x wall-clock ratio far below the 100x a quadratic candidate step
 would show; near-constant overhead queries ride the extra parallelism.
 
-Usage: python tools/scale_check.py [sf_dir] (default /root/testdata/sf0.1)
+Usage: python tools/scale_check.py [sf_dir] [query ...]
+(default /root/testdata/sf0.1, every query in QUERIES). The replica
+multiple is SPARK_GRAFT_REPLICAS (default 10).
 """
 
 from __future__ import annotations
@@ -15,12 +17,13 @@ import os
 import shutil
 import sys
 import tempfile
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
+from bench import run_timed  # noqa: E402
 from vena_etl_tool_spark.catalog import TABLES, load_table  # noqa: E402
 from vena_etl_tool_spark.registry import all_specs  # noqa: E402
 from vena_etl_tool_spark.session import get_spark  # noqa: E402
@@ -361,7 +364,7 @@ QUERIES = (
     # r11 second session: SNM is per-block rank windows + an n*(w-1)
     # bounded band join (~linear); winnowing is per-doc windows + a
     # df-capped fingerprint join — on the all-clones replica every
-    # fingerprint's df multiplies by REPLICAS, so the [2, cap] df band
+    # fingerprint's df multiplies by the replica count, so the [2, cap] df band
     # governs the candidate volume (same cap-governed class as the
     # minhash bucket sweep).
     "dedup_sorted_neighborhood",
@@ -400,24 +403,27 @@ QUERIES = (
     "profile_correlation_matrix",
     "orders_pareto_abc",
 )
-# Replica multiple for the scaled corpus. Default 10; override with
-# SPARK_GRAFT_REPLICAS (e.g. 100) for a two-decade probe on a focused
-# query subset — at 100x the full-table build writes ~1.7 GB under /tmp
-# and the fact-bound TPC-H queries take minutes, so pass an explicit
-# query list rather than sweeping all of QUERIES.
-REPLICAS = int(os.environ.get("SPARK_GRAFT_REPLICAS", "10"))
+def steady_seconds(spark, group: str, build) -> float:
+    """Seconds of the second of two runs of ``build`` (build + noop write,
+    via ``bench.run_timed``). The first run warms codegen/JIT and any
+    memoized derived artifacts (persisted_artifact) outside the timed run,
+    so a ratio compares steady state to steady state — a cold big side
+    would bill one-time build cost to the big scale only."""
+    run_timed(spark, f"{group}:warm", build)
+    return run_timed(spark, group, build)
 
 
-def build_replica(spark, sf_dir: str, out_dir: str) -> None:
-    """documents/embeddings/events replicated with shifted keys (unique ids,
-    same content distribution — near-dup structure is preserved per copy);
-    other tables symlink-copied so load_table still works."""
+def build_replica(spark, sf_dir: str, out_dir: str, replicas: int) -> None:
+    """documents/embeddings/events replicated ``replicas`` times with
+    shifted keys (unique ids, same content distribution — near-dup
+    structure is preserved per copy); other tables symlink-copied so
+    load_table still works."""
     os.makedirs(out_dir, exist_ok=True)
     n_docs = 10_000_000  # id shift stride ≫ any fixture id
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     ev = load_table(spark, sf_dir, "events")
-    rep = F.explode(F.sequence(F.lit(0), F.lit(REPLICAS - 1))).alias("rep")
+    rep = F.explode(F.sequence(F.lit(0), F.lit(replicas - 1))).alias("rep")
     docs.select("*", rep).withColumn(
         "doc_id", F.col("doc_id") + F.col("rep").cast("long") * n_docs
     ).drop("rep").write.mode("overwrite").parquet(os.path.join(out_dir, "documents.parquet"))
@@ -479,19 +485,19 @@ def persisted_probe(spark, sf_dir: str, out_dir: str) -> None:
     st10 = incr_build_state(
         docs10.filter(F.col("doc_id") % 4 != 0), os.path.join(out_dir, "_state10x")
     )
-    times = {}
-    for tag, st in (("1x", st1), ("10x", st10)):
-        incr_admit(spark, batch, st).write.mode("overwrite").format("noop").save()
-        t0 = time.perf_counter()
-        incr_admit(spark, batch, st).write.mode("overwrite").format("noop").save()
-        times[tag] = time.perf_counter() - t0
+    times = {
+        tag: steady_seconds(
+            spark, f"scale:incr_admit:{tag}", partial(incr_admit, spark, batch, st)
+        )
+        for tag, st in (("1x", st1), ("10x", st10))
+    }
     print(
         f"| incr_admit fixed batch vs state size | {times['1x']:.2f}s "
         f"| {times['10x']:.2f}s | {times['10x'] / times['1x']:.1f} |"
     )
 
 
-def minhash_cap_sweep(spark, out_dir: str) -> None:
+def minhash_cap_sweep(spark, out_dir: str, replicas: int) -> None:
     """Cap-sensitivity for the one genuinely cap-governed superlinear
     entry (minhash 2.8x at 10x pathological dup density): the replica
     multiplies every band bucket's occupancy 10x, so candidate pairs grow
@@ -503,17 +509,23 @@ def minhash_cap_sweep(spark, out_dir: str) -> None:
 
     docs = load_table(spark, out_dir, "documents")
     for cap in (25, 50, 100):
-        q = minhash_lsh_pairs(docs, max_bucket_size=cap)
-        q.write.mode("overwrite").format("noop").save()  # warm
-        t0 = time.perf_counter()
-        q.write.mode("overwrite").format("noop").save()
-        print(f"| minhash_lsh_pairs {REPLICAS}x, bucket cap {cap} | — | "
-              f"{time.perf_counter() - t0:.2f}s | — |")
+        t = steady_seconds(
+            spark,
+            f"scale:minhash_cap{cap}",
+            partial(minhash_lsh_pairs, docs, max_bucket_size=cap),
+        )
+        print(f"| minhash_lsh_pairs {replicas}x, bucket cap {cap} | — | "
+              f"{t:.2f}s | — |")
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = sys.argv[2:] or None  # optional query-name subset for re-measures
+    # e.g. 100 for a two-decade probe on a focused query subset — at 100x
+    # the full-table build writes ~1.7 GB under /tmp and the fact-bound
+    # TPC-H queries take minutes, so pass an explicit query list rather
+    # than sweeping all of QUERIES.
+    replicas = int(os.environ.get("SPARK_GRAFT_REPLICAS", "10"))
     spark = get_spark("scale-check")
     specs = all_specs()
     if only:
@@ -522,29 +534,20 @@ def main() -> int:
             raise SystemExit(f"unknown query name(s): {unknown}")
     out_dir = tempfile.mkdtemp(prefix="scale10x_")
     try:
-        build_replica(spark, sf_dir, out_dir)
-        print(f"| query | {os.path.basename(sf_dir)} | {REPLICAS}x | ratio |")
+        build_replica(spark, sf_dir, out_dir, replicas)
+        print(f"| query | {os.path.basename(sf_dir)} | {replicas}x | ratio |")
         print("|---|---|---|---|")
         for name in only or QUERIES:
             fn = specs[name].fn
-            # Warm BOTH scales: codegen/JIT and any memoized derived
-            # artifacts (persisted_artifact) populate outside the timed
-            # run, so the ratio compares steady-state to steady-state —
-            # a cold 10x side would bill one-time build cost to the big
-            # scale only and inflate the ratio.
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            base = time.perf_counter() - t0
-            fn(spark, out_dir).write.mode("overwrite").format("noop").save()  # warm
-            t0 = time.perf_counter()
-            fn(spark, out_dir).write.mode("overwrite").format("noop").save()
-            big = time.perf_counter() - t0
+            base = steady_seconds(spark, f"scale:{name}:1x", partial(fn, spark, sf_dir))
+            big = steady_seconds(
+                spark, f"scale:{name}:{replicas}x", partial(fn, spark, out_dir)
+            )
             print(f"| {name} | {base:.2f}s | {big:.2f}s | {big / base:.1f} |")
         if only is None or "corpus_incremental_persisted" in only:
             persisted_probe(spark, sf_dir, out_dir)
         if only is None or "dedup_minhash_lsh_pairs" in only:
-            minhash_cap_sweep(spark, out_dir)
+            minhash_cap_sweep(spark, out_dir, replicas)
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
     return 0

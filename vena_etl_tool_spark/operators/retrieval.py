@@ -744,7 +744,7 @@ def retrieval_system_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     too cheap to recompute for three eager materialization jobs to pay
     off — the pipeline_pretrain_flagship lesson again. All three
     checkpoints reverted; A/B'd under bench conditions this round
-    (tools/bench_ab.py) rather than opt_measure."""
+    (tools/bench_ab.py) rather than in a fresh session."""
     lex = text_bm25_search(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rk").alias("l_rk")
     )

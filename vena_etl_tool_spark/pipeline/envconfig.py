@@ -2,9 +2,8 @@
 
 Reference parity: `/root/reference/src/config.js:5-34` — dotenv loading
 (`require('dotenv').config()`), a frozen config object reading
-`VENA_API_URL` / `VENA_TEMPLATE_ID` / `VENA_USERNAME` / `VENA_PASSWORD`
-with retry + logging constants, and `validateConfig` failing fast (hard
-exit) when credentials are absent.
+`VENA_API_URL` / `VENA_TEMPLATE_ID` / `VENA_USERNAME` / `VENA_PASSWORD`,
+and `validateConfig` failing fast (hard exit) when credentials are absent.
 
 Spark-first deltas:
 - `validate_config` raises ``ConfigError`` instead of calling
@@ -14,6 +13,9 @@ Spark-first deltas:
   URL as the api fallback; this engine has no such endpoint, so an unset
   `VENA_API_URL` means "no HTTP upload target" and the upload path
   falls back to the local Spark sink.
+- the reference's retry and log-dir constants are not config fields:
+  `http_sink` owns its retry policy (`DEFAULT_RETRIES`/`DEFAULT_BACKOFF_S`)
+  and the CLI takes its audit dir from `--log-dir`.
 - dotenv precedence matches the npm package: values already present in
   the process environment WIN over the `.env` file.
 """
@@ -22,10 +24,6 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-
-DEFAULT_RETRY_ATTEMPTS = 3  # config.js:10
-DEFAULT_RETRY_BACKOFF_MS = 300  # config.js:11
-
 
 class ConfigError(ValueError):
     """Missing/invalid environment configuration (reference: hard exit at
@@ -38,9 +36,6 @@ class EnvConfig:
     template_id: str = ""
     username: str = ""
     password: str = ""
-    retry_attempts: int = DEFAULT_RETRY_ATTEMPTS
-    retry_backoff_ms: int = DEFAULT_RETRY_BACKOFF_MS
-    log_dir: str = "logs"  # config.js:19 './logs'
 
 
 def parse_env_file(text: str) -> dict[str, str]:
@@ -88,7 +83,6 @@ def load_config(
         template_id=merged.get("VENA_TEMPLATE_ID", ""),
         username=merged.get("VENA_USERNAME", ""),
         password=merged.get("VENA_PASSWORD", ""),
-        log_dir=merged.get("VENA_LOG_DIR", "logs"),
     )
 
 
