@@ -4,15 +4,26 @@ from __future__ import annotations
 
 import json
 import os
+import pathlib
+import re
+import threading
+import time
+import uuid
 
 import pytest
+from pyspark.sql import types as T
 
 from vena_etl_tool_spark.catalog import load_table
 from vena_etl_tool_spark.pipeline.audit import AuditLog
 from vena_etl_tool_spark.pipeline.http_sink import HttpSinkConfig, post_with_retry, write_http
 from vena_etl_tool_spark.pipeline.ingest import ingest_csv, validate_csv_file
 from vena_etl_tool_spark.pipeline.jobs import JobRegistry
-from vena_etl_tool_spark.pipeline.spec import PipelineSpec, SpecError, default_registry
+from vena_etl_tool_spark.pipeline.spec import (
+    PipelineSpec,
+    SpecError,
+    SpecRegistry,
+    default_registry,
+)
 
 
 @pytest.fixture()
@@ -305,3 +316,198 @@ def test_cmd_upload_env_config_paths(tmp_path, spark, csv_fixture, capsys):
     assert headers["authorization"].startswith("Basic ")
     with open(csv_fixture, "rb") as f:
         assert f.read() in body
+
+
+# --- one scan per upload ----------------------------------------------------
+
+_DEMO_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("amount", T.DoubleType()),
+        T.StructField("label", T.StringType()),
+    ]
+)
+
+
+def _demo_spec(target: str = "demo_loaded") -> PipelineSpec:
+    return PipelineSpec("demo-csv", "Demo CSV", "id/amount/label", _DEMO_SCHEMA, target=target)
+
+
+def _demo_csv(path, n_good: int, n_bad: int) -> str:
+    """`n_good` typed rows, then `n_bad` rows whose `id` does not parse."""
+    rows = [f"{i},{i}.5,l{i % 2}" for i in range(n_good)]
+    rows += [f"x{i},1.0,bad" for i in range(n_bad)]
+    path.write_text("id,amount,label\n" + "\n".join(rows) + "\n")
+    return str(path)
+
+
+def _persisted_rdds(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+class _SinkJobs(JobRegistry):
+    """A JobRegistry that runs `before()` on each batch job's own thread
+    ahead of the job, and keeps the handles it returns."""
+
+    def __init__(self, spark, audit, before) -> None:
+        super().__init__(spark, audit)
+        self.before = before
+        self.handles = []
+
+    def submit_batch(self, fn, description=""):
+        def run():
+            self.before()
+            return fn()
+
+        handle = super().submit_batch(run, description)
+        self.handles.append(handle)
+        return handle
+
+
+def _upload(spark, tmp_path, csv, spec, jobs=None, env_cfg=None, transport=None):
+    """cmd_upload of `csv` under `spec`; returns (rc, audit, jobs)."""
+    from vena_etl_tool_spark.pipeline.cli import cmd_upload
+    from vena_etl_tool_spark.pipeline.envconfig import EnvConfig
+
+    audit = AuditLog(str(tmp_path / "logs"))
+    jobs = jobs if jobs is not None else JobRegistry(spark, audit)
+    specs = SpecRegistry()
+    specs.register(spec)
+    rc = cmd_upload(
+        [csv, spec.spec_id], spark, audit, jobs, specs,
+        env_cfg=env_cfg or EnvConfig(), transport=transport,
+    )
+    return rc, audit, jobs
+
+
+def test_reingest_of_rewritten_path_reads_the_new_file(spark, tmp_path):
+    path = tmp_path / "same.csv"
+    first = ingest_csv(spark, _demo_csv(path, 4, 1), _demo_spec())
+    assert (first.n_good, first.n_quarantined) == (4, 1)
+    second = ingest_csv(spark, _demo_csv(path, 7, 3), _demo_spec())
+    assert (second.n_good, second.n_quarantined) == (7, 3)
+    assert second.good.count() == 7
+
+
+def test_upload_leaves_no_persisted_rdd(spark, tmp_path):
+    before = _persisted_rdds(spark)
+    rc, audit, _ = _upload(spark, tmp_path, _demo_csv(tmp_path / "in.csv", 5, 2), _demo_spec())
+    assert rc == 0
+    assert audit.read_channel("upload-history")[-1]["rowsLoaded"] == 5
+    assert _persisted_rdds(spark) == before
+
+
+def test_upload_runs_one_spark_job(spark, tmp_path):
+    """The sink's parquet write is the upload's only job: the counts come
+    from its observation. Jobs on the calling thread and on the sink job's
+    thread are put in one group, and a fence job in a second group, run
+    after cmd_upload returns, marks when every earlier job is visible."""
+    sc = spark.sparkContext
+    group = f"upload-test-{uuid.uuid4().hex}"
+    jobs = _SinkJobs(spark, AuditLog(str(tmp_path / "logs")), lambda: sc.setJobGroup(group, group))
+    csv = _demo_csv(tmp_path / "in.csv", 6, 2)
+    sc.setJobGroup(group, group)
+    try:
+        rc, audit, _ = _upload(spark, tmp_path, csv, _demo_spec(), jobs=jobs)
+    finally:
+        sc.setJobGroup(group + "-fence", "fence")
+        spark.range(1).collect()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    status = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not status.getJobIdsForGroup(group + "-fence"):
+        assert time.monotonic() < deadline, "fence job never reached the tracker"
+        time.sleep(0.05)
+    assert rc == 0
+    record = audit.read_channel("upload-history")[-1]
+    assert (record["rowsLoaded"], record["rowsQuarantined"]) == (6, 2)
+    assert len(status.getJobIdsForGroup(group)) == 1
+
+
+def test_permissive_verdicts_hold_on_pruned_consumers(spark, tmp_path):
+    """Consumers that read one column, or only the corrupt-record column,
+    still get whole-row verdicts from the uncached scan: the observation's
+    metric over every spec column keeps the scan unpruned."""
+    before = _persisted_rdds(spark)
+    res = ingest_csv(spark, _demo_csv(tmp_path / "in.csv", 4, 2), _demo_spec())
+    assert sorted(r.label for r in res.good.select("label").collect()) == ["l0", "l0", "l1", "l1"]
+    assert res.good.groupBy("label").count().count() == 2
+    assert res.quarantine.count() == 2
+    assert _persisted_rdds(spark) == before
+
+
+def test_failed_sink_records_null_counts(spark, tmp_path):
+    """A sink job that fails gives rc 1, a FAILED job and an upload record
+    with null counts (its observation would hold a partial run's). The
+    target's parent is a regular file: overwrite mode would replace a file
+    at the target itself, so this is the way to make the write fail."""
+    (tmp_path / "blocker").write_text("not a directory")
+    csv = _demo_csv(tmp_path / "in.csv", 3, 1)
+    out = {}
+    t = threading.Thread(
+        target=lambda: out.update(res=_upload(spark, tmp_path, csv, _demo_spec("blocker/out"))),
+        daemon=True,
+    )
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "cmd_upload did not return after its sink job failed"
+    rc, audit, jobs = out["res"]
+    assert rc == 1
+    record = audit.read_channel("upload-history")[-1]
+    assert record["rowsLoaded"] is None and record["rowsQuarantined"] is None
+    assert jobs.status(record["jobId"])["state"] == "FAILED"
+
+
+def test_counts_after_a_failed_write_raise(spark, tmp_path):
+    """A failed write leaves partial metrics in the observation: reading the
+    counts afterwards raises at once, neither blocking nor returning them."""
+    (tmp_path / "blocker").write_text("not a directory")
+    res = ingest_csv(spark, _demo_csv(tmp_path / "in.csv", 3, 1), _demo_spec())
+    with pytest.raises(Exception, match="not a directory"):
+        res.write(str(tmp_path / "blocker" / "out"))
+    with pytest.raises(RuntimeError, match="partial"):
+        res.n_good
+
+
+def test_failed_post_waits_for_the_sink_job(spark, tmp_path):
+    """The POST runs while the sink job runs, and when it gives up after
+    its retries cmd_upload still waits for the sink job before raising.
+    The sink job is held until the last POST attempt, so a POST that ran
+    only after the sink job, or a raise that skipped the wait, fails."""
+    from vena_etl_tool_spark.pipeline.envconfig import EnvConfig
+    from vena_etl_tool_spark.pipeline.http_sink import DEFAULT_RETRIES
+
+    last_attempt, released = threading.Event(), []
+    jobs = _SinkJobs(
+        spark, AuditLog(str(tmp_path / "logs")), lambda: released.append(last_attempt.wait(10))
+    )
+    attempts = []
+
+    def down(url, body, headers):
+        attempts.append(url)
+        if len(attempts) == DEFAULT_RETRIES + 1:
+            last_attempt.set()
+        raise IOError("endpoint down")
+
+    cfg = EnvConfig(api_url="http://etl.test", template_id="demo-csv", username="u", password="p")
+    csv = _demo_csv(tmp_path / "in.csv", 3, 1)
+    with pytest.raises(IOError, match="endpoint down"):
+        _upload(spark, tmp_path, csv, _demo_spec(), jobs=jobs, env_cfg=cfg, transport=down)
+    (handle,) = jobs.handles
+    assert not handle.thread.is_alive()
+    assert handle.state == "SUCCEEDED"
+    assert released == [True]
+    assert len(attempts) == DEFAULT_RETRIES + 1
+
+
+def test_pipeline_persists_nothing():
+    """The pipeline leaves no persisted state behind: each upload is one
+    uncached scan, so no `.cache(`/`.persist(` appears in its code."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "vena_etl_tool_spark" / "pipeline"
+    offenders = [
+        f"{path.name}:{i}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\.(cache|persist)\(", line)
+    ]
+    assert not offenders, "\n".join(offenders)

@@ -4,6 +4,8 @@ pushdown, broadcast, or top-k physical strategies."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from vena_etl_tool_spark.registry import all_specs
@@ -792,3 +794,38 @@ def test_pareto_abc_windows_are_band_partitioned(spark, sf_dir):
     for ln in plan.splitlines():
         if re.search(r"row_number\(\) windowspecdefinition\(", ln):
             assert "windowspecdefinition(band" in ln, ln
+
+
+# `x#12 = y#12`: a join equality whose two sides are one attribute
+_SAME_ATTRIBUTE_EQ = re.compile(r"#(\d+)L? = [\w.]+#\1(?!\d)")
+
+
+@pytest.mark.parametrize("name", ["sim_rerank_mmr", "layout_overlap_depth"])
+def test_join_equalities_compare_distinct_attributes(spark, sf_dir, monkeypatch, name):
+    """Joining a frame to one derived from it on `a["k"] == b["k"]` builds
+    a trivially true equality (both sides are one attribute); the result is
+    right only because Dataset.join re-resolves such an equality against
+    its two sides. With that re-resolution off, the analyzed plan of every
+    join the query builds (checkpointed ones included) must still compare
+    two distinct exprIds in each equality."""
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame class
+    plans = []
+    join = frame_cls.join
+
+    def recording_join(self, *args, **kwargs):
+        out = join(self, *args, **kwargs)
+        plans.append(out._jdf.queryExecution().analyzed().toString())
+        return out
+
+    monkeypatch.setattr(frame_cls, "join", recording_join)
+    conf = "spark.sql.selfJoinAutoResolveAmbiguity"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        _SPECS[name].fn(spark, sf_dir)
+    finally:
+        spark.conf.set(conf, before)
+    joins = [ln.strip() for p in plans for ln in p.splitlines() if "Join " in ln]
+    assert joins, name
+    trivial = [ln for ln in joins if _SAME_ATTRIBUTE_EQ.search(ln)]
+    assert not trivial, trivial

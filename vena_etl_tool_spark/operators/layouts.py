@@ -640,15 +640,17 @@ def layout_overlap_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     depth = day_grain.withColumn("depth", F.sum("d").over(w).cast("long"))
-    mx = depth.groupBy("layout").agg(F.max("depth").alias("max_overlap_depth"))
+    mx = depth.groupBy(F.col("layout").alias("mx_layout")).agg(
+        F.max("depth").alias("max_overlap_depth")
+    )
     ns = zones.groupBy("layout").agg(F.count(F.lit(1)).alias("n_shards"))
     return (
         depth.join(
             F.broadcast(mx),
-            (depth["layout"] == mx["layout"])
+            (F.col("layout") == F.col("mx_layout"))
             & (F.col("depth") == F.col("max_overlap_depth")),
         )
-        .drop(mx["layout"])
+        .drop("mx_layout")
         .join(F.broadcast(ns), "layout")
         .groupBy("layout", "n_shards", "max_overlap_depth")
         .agg(F.min("day").cast("long").alias("first_day_at_max"))

@@ -990,7 +990,7 @@ def sim_rerank_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = (
         ca.join(cb, (F.col("query_id") == F.col("qb")) & (F.col("va") != F.col("vb")))
-        .select("query_id", "va", "vb", F.expr(dot_p).alias("dt"))
+        .select(F.col("query_id").alias("pq"), "va", "vb", F.expr(dot_p).alias("dt"))
         .localCheckpoint()
     )
     cand_slim = cand.select("query_id", "vec_id", "rel")
@@ -1014,7 +1014,7 @@ def sim_rerank_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .join(
                 pairs,
-                (pairs["query_id"] == cand_slim["query_id"])
+                (F.col("pq") == cand_slim["query_id"])
                 & (pairs["va"] == cand_slim["vec_id"])
                 & (pairs["vb"] == F.col("pv")),
             )

@@ -19,7 +19,7 @@ from ..session import get_spark
 from .audit import AuditLog
 from .envconfig import ConfigError, EnvConfig, load_config, validate_config
 from .http_sink import basic_auth_headers, upload_file_multipart
-from .ingest import ingest_csv, validate_csv_file, write_table
+from .ingest import ingest_csv, validate_csv_file
 from .jobs import JobRegistry
 from .spec import SpecError, default_registry
 
@@ -85,41 +85,47 @@ def cmd_upload(
     started = time.time()
     result = ingest_csv(spark, path, spec)
     target = f"{audit.log_dir}/../{spec.target}" if spec.target else "loaded"
-    handle = jobs.submit_batch(
-        lambda: write_table(result.good, target), description=f"upload {v.file_name}"
-    )
-    jobs.wait(handle.job_id)
-    if cfg.api_url:
-        # Reference wire format: POST the raw CSV as multipart/form-data
-        # field `file` with contentType text/csv to the template's
-        # startWithFile endpoint (templates.js:133-160), basic auth,
-        # retry/backoff inside upload_file_multipart.
-        with open(path, "rb") as f:
-            payload = f.read()
-        extra = {"transport": transport} if transport is not None else {}
-        upload_file_multipart(
-            f"{cfg.api_url}/api/public/v1/etl/templates/{spec_id}/startWithFile",
-            payload,
-            v.file_name,
-            basic_auth_headers(cfg.username, cfg.password),
-            **extra,
-        )
+    handle = jobs.submit_batch(lambda: result.write(target), description=f"upload {v.file_name}")
+    try:
+        if cfg.api_url:
+            # Reference wire format: POST the raw CSV as multipart/form-data
+            # field `file` with contentType text/csv to the template's
+            # startWithFile endpoint (templates.js:133-160), basic auth,
+            # retry/backoff inside upload_file_multipart. It runs while the
+            # sink job writes on the registry's thread.
+            with open(path, "rb") as f:
+                payload = f.read()
+            extra = {"transport": transport} if transport is not None else {}
+            upload_file_multipart(
+                f"{cfg.api_url}/api/public/v1/etl/templates/{spec_id}/startWithFile",
+                payload,
+                v.file_name,
+                basic_auth_headers(cfg.username, cfg.password),
+                **extra,
+            )
+    finally:  # a POST that gives up still leaves no sink job running
+        jobs.wait(handle.job_id)
     duration = time.time() - started
+    # The counts come from the sink job's scan. A failed job's observation
+    # holds a partial run's metrics, so its record carries null counts.
+    ok = handle.state == "SUCCEEDED"
+    n_good = result.n_good if ok else None
+    n_quarantined = result.n_quarantined if ok else None
     audit.log_upload(
         {
             "fileName": v.file_name,
             "fileSize": v.file_size_kb,
             "specId": spec_id,
             "jobId": handle.job_id,
-            "rowsLoaded": result.n_good,
-            "rowsQuarantined": result.n_quarantined,
+            "rowsLoaded": n_good,
+            "rowsQuarantined": n_quarantined,
             "durationSeconds": round(duration, 2),
         }
     )
-    print(f"✅ Loaded {result.n_good} rows ({result.n_quarantined} quarantined) "
+    print(f"✅ Loaded {n_good} rows ({n_quarantined} quarantined) "
           f"in {duration:.2f}s — job {handle.job_id} [{handle.state}]")
     print(f"   Check status: status {handle.job_id}")
-    return 0 if handle.state == "SUCCEEDED" else 1
+    return 0 if ok else 1
 
 
 def cmd_status(args: list[str], spark, audit, jobs: JobRegistry, specs) -> int:

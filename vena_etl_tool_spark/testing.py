@@ -12,6 +12,8 @@ from __future__ import annotations
 import datetime
 import math
 import os
+import tempfile
+import uuid
 from dataclasses import dataclass
 from decimal import Decimal
 
@@ -24,8 +26,24 @@ from .registry import QuerySpec, all_specs
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """Register every fixture table as a DuckDB view, like the driver does."""
-    con = duckdb.connect()
+    """Register every fixture table as a DuckDB view, as the oracle gate does.
+
+    The connection's resources are explicit, so an oracle too big for the
+    host spills or fails with DuckDB's out-of-memory error instead of being
+    killed by the host: half the physical RAM, one thread per CPU this
+    process may run on, and a spill directory of its own under the system
+    temp dir (DuckDB creates it on the first spill and removes it on close).
+    """
+    phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con = duckdb.connect(
+        config={
+            "memory_limit": f"{phys_bytes // 2 // 2**20}MiB",
+            "threads": len(os.sched_getaffinity(0)),
+            "temp_directory": os.path.join(
+                tempfile.gettempdir(), f"duckdb-oracle-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+            ),
+        }
+    )
     for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
