@@ -437,15 +437,29 @@ def run_timed(spark, group: str, build: Callable[[], DataFrame]) -> float:
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
+def codegen_compiles(spark) -> int:
+    """Janino compiles this JVM has run so far (Spark's CodegenMetrics
+    compilation-time histogram count): whole-stage codegen classes that
+    missed the generated-class cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def time_passes(
-    spark, specs: dict[str, QuerySpec], names: list[str], sf_dir: str, passes: int
+    spark,
+    specs: dict[str, QuerySpec],
+    names: list[str],
+    sf_dir: str,
+    passes: int,
+    compiles: dict[str, list[int]] | None = None,
 ) -> tuple[dict[str, float], dict[str, str], list[float]]:
     """Time ``names`` at ``sf_dir`` over ``passes`` passes; return the
     per-query min, the errors and each pass's total. A query that throws
     is recorded once, dropped from the mins and skipped in later passes;
     the pass it fails in and every later pass total leave it out — one
     broken query must not take out the whole bench line (the r2 failure
-    mode)."""
+    mode). ``compiles``, when given, gets each successful run's codegen
+    compile count appended under the query's name, one entry per pass."""
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     pass_totals: list[float] = []
@@ -455,6 +469,7 @@ def time_passes(
             if name in errors:
                 continue
             build = partial(specs[name].fn, spark, sf_dir)
+            before = codegen_compiles(spark)
             try:
                 t = round(run_timed(spark, f"bench:{name}:pass{i}", build), 3)
             except Exception as exc:
@@ -462,6 +477,8 @@ def time_passes(
                 print(f"BENCH FAIL {name}: {errors[name]}", file=sys.stderr)
                 timings.pop(name, None)
                 continue
+            if compiles is not None:
+                compiles.setdefault(name, []).append(codegen_compiles(spark) - before)
             pass_total += t
             timings[name] = min(t, timings.get(name, t))
         pass_totals.append(round(pass_total, 3))
@@ -495,8 +512,11 @@ def main() -> int:
     specs = all_specs()
 
     # JVM/codegen warmup: run every headline query once on the smallest
-    # fixture so the timed pass measures data-proportional cost, not
-    # first-use JIT/codegen compilation.
+    # fixture. It JIT-compiles the JVM's hot paths and fills the
+    # generated-class cache (sized by get_spark to hold the whole headline
+    # set), so timed passes recompile only the classes whose generated
+    # code changes with the data or from run to run; codegen_compiles in
+    # the detail file counts them per query and pass.
     warmup_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warmup_dir) and warmup_dir != sf_dir:
         for name in HEADLINE:
@@ -515,7 +535,10 @@ def main() -> int:
     # disagree or loadavg is high, the artifact itself shows the run was
     # load-contaminated rather than a code regression.
     load_before = os.getloadavg()[0]
-    timings, errors, pass_totals = time_passes(spark, specs, HEADLINE, sf_dir, 3)
+    compiles: dict[str, list[int]] = {}
+    timings, errors, pass_totals = time_passes(
+        spark, specs, HEADLINE, sf_dir, 3, compiles
+    )
 
     canary = run_canary(spark)
 
@@ -523,7 +546,9 @@ def main() -> int:
     # from HEADLINE by cost policy still get a per-round perf row, timed
     # ONCE (not 3 passes) and recorded separately so they never distort
     # the headline metric or the cross-round subset totals.
-    side_timings, side_errors, _ = time_passes(spark, specs, SIDE_QUERIES, sf_dir, 1)
+    side_timings, side_errors, _ = time_passes(
+        spark, specs, SIDE_QUERIES, sf_dir, 1, compiles
+    )
     errors.update(side_errors)
 
     total = round(sum(timings.values()), 3)
@@ -566,6 +591,7 @@ def main() -> int:
     }
     detail = dict(line)
     detail["queries"] = timings
+    detail["codegen_compiles"] = compiles
     if errors:
         line["n_errors"] = len(errors)
         detail["errors"] = errors
