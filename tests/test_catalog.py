@@ -1,7 +1,7 @@
 """The catalog's per-session schema memo: a table's schema is inferred once
 per session and file identity, so repeat loads launch no Spark job; a file
 rewritten at the same path is inferred again; and only the schema is
-memoized, never data."""
+memoized, never data. Every gate-SF fixture file scans in one task."""
 
 from __future__ import annotations
 
@@ -14,15 +14,22 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from conftest import SMOKE_SF_DIR
 from vena_etl_tool_spark.catalog import load_table, table_schema
 from vena_etl_tool_spark.registry import all_specs
 
 
 def _jobs_launched(spark, fn) -> tuple[object, int]:
-    """Run ``fn()`` inside a fresh job group; return its result and how many
-    Spark jobs it launched. The status tracker is fed by the asynchronous
-    listener bus, so a fence job in a second group is run afterwards and
-    awaited: once the fence is visible, every earlier job is too."""
+    out, job_ids = _job_ids(spark, fn)
+    return out, len(job_ids)
+
+
+def _job_ids(spark, fn) -> tuple[object, list[int]]:
+    """Run ``fn()`` inside a fresh job group; return its result and the ids
+    of the Spark jobs it launched. The status tracker is fed by the
+    asynchronous listener bus, so a fence job in a second group is run
+    afterwards and awaited: once the fence is visible, every earlier job
+    is too."""
     sc = spark.sparkContext
     group = f"catalog-test-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -37,7 +44,7 @@ def _jobs_launched(spark, fn) -> tuple[object, int]:
     while not status.getJobIdsForGroup(group + "-fence"):
         assert time.monotonic() < deadline, "fence job never reached the tracker"
         time.sleep(0.05)
-    return out, len(status.getJobIdsForGroup(group))
+    return out, list(status.getJobIdsForGroup(group))
 
 
 def test_second_load_launches_no_job(spark, sf_dir, tmp_path):
@@ -106,3 +113,22 @@ def test_build_phase_launches_no_jobs(spark, sf_dir, name):
     spec.fn(spark, sf_dir)  # warm-up fills the memo
     _, jobs = _jobs_launched(spark, lambda: spec.fn(spark, sf_dir))
     assert jobs == 0
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_fixture_files_scan_in_one_task(spark, sf):
+    """The session's file-split floor stays above every gate-SF parquet file
+    (the largest, sf0.01 lineitem, is 1,042,463 bytes), so each one scans
+    in exactly one task; a lower floor would split them into tasks that
+    read no row group."""
+    sf_dir = os.path.join(os.path.dirname(SMOKE_SF_DIR), sf)
+    status = spark.sparkContext.statusTracker()
+    tasks = {}
+    for file in sorted(os.listdir(sf_dir)):
+        name = file.removesuffix(".parquet")
+        df = load_table(spark, sf_dir, name)
+        _, job_ids = _job_ids(spark, lambda: df.write.mode("overwrite").format("noop").save())
+        tasks[name] = sum(
+            status.getStageInfo(s).numTasks for j in job_ids for s in status.getJobInfo(j).stageIds
+        )
+    assert len(tasks) == 10 and set(tasks.values()) == {1}, tasks

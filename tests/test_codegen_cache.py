@@ -1,9 +1,10 @@
 """The generated-class cache holds the engine's working set: the session
 is built with ``CODEGEN_CACHE_ENTRIES`` cache entries, so a repeated
 ``query_mix`` pass compiles no whole-stage codegen class (at Spark's
-default of 100 entries it recompiles about 120-150); a session whose cache
-is smaller logs one warning; and ``bench.time_passes`` records each run's
-compile count."""
+default of 100 entries it recompiles about 120-150); class names carry no
+codegen stage id, so a query whose stages AQE renumbers recompiles nothing
+either; a session whose cache is smaller logs one warning; and
+``bench.time_passes`` records each run's compile count."""
 
 from __future__ import annotations
 
@@ -62,6 +63,17 @@ def test_repeated_query_mix_pass_compiles_nothing(spark):
             counts[name] = _compiles(spark) - before
         per_pass.append(counts)
     assert sum(per_pass[1].values()) == 0, per_pass
+
+
+def test_repeat_with_renumbered_stages_compiles_nothing(spark):
+    """AQE numbers this query's codegen stages differently from run to run;
+    with the stage id kept out of class names the repeat still hits the
+    cache (with the id in the name it recompiled 4-14 classes here)."""
+    build = partial(all_specs()["text_hll_cardinality"].fn, spark, SMOKE_SF_DIR)
+    bench.run_timed(spark, "codegen-cache:hll:0", build)
+    before = _compiles(spark)
+    bench.run_timed(spark, "codegen-cache:hll:1", build)
+    assert _compiles(spark) - before == 0
 
 
 def test_small_codegen_cache_logs_once_per_session(caplog):

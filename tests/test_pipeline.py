@@ -24,6 +24,7 @@ from vena_etl_tool_spark.pipeline.spec import (
     SpecRegistry,
     default_registry,
 )
+from vena_etl_tool_spark.session import FILE_SPLIT_FLOOR
 
 
 @pytest.fixture()
@@ -397,18 +398,17 @@ def test_upload_leaves_no_persisted_rdd(spark, tmp_path):
     assert _persisted_rdds(spark) == before
 
 
-def test_upload_runs_one_spark_job(spark, tmp_path):
-    """The sink's parquet write is the upload's only job: the counts come
-    from its observation. Jobs on the calling thread and on the sink job's
-    thread are put in one group, and a fence job in a second group, run
-    after cmd_upload returns, marks when every earlier job is visible."""
+def _grouped_upload(spark, tmp_path, csv, spec):
+    """cmd_upload of `csv` under `spec`; returns (rc, audit, job ids).
+    Jobs on the calling thread and on the sink job's thread are put in one
+    group, and a fence job in a second group, run after cmd_upload
+    returns, marks when every earlier job is visible to the tracker."""
     sc = spark.sparkContext
     group = f"upload-test-{uuid.uuid4().hex}"
     jobs = _SinkJobs(spark, AuditLog(str(tmp_path / "logs")), lambda: sc.setJobGroup(group, group))
-    csv = _demo_csv(tmp_path / "in.csv", 6, 2)
     sc.setJobGroup(group, group)
     try:
-        rc, audit, _ = _upload(spark, tmp_path, csv, _demo_spec(), jobs=jobs)
+        rc, audit, _ = _upload(spark, tmp_path, csv, spec, jobs=jobs)
     finally:
         sc.setJobGroup(group + "-fence", "fence")
         spark.range(1).collect()
@@ -418,10 +418,18 @@ def test_upload_runs_one_spark_job(spark, tmp_path):
     while not status.getJobIdsForGroup(group + "-fence"):
         assert time.monotonic() < deadline, "fence job never reached the tracker"
         time.sleep(0.05)
+    return rc, audit, status.getJobIdsForGroup(group)
+
+
+def test_upload_runs_one_spark_job(spark, tmp_path):
+    """The sink's parquet write is the upload's only job: the counts come
+    from its observation."""
+    csv = _demo_csv(tmp_path / "in.csv", 6, 2)
+    rc, audit, job_ids = _grouped_upload(spark, tmp_path, csv, _demo_spec())
     assert rc == 0
     record = audit.read_channel("upload-history")[-1]
     assert (record["rowsLoaded"], record["rowsQuarantined"]) == (6, 2)
-    assert len(status.getJobIdsForGroup(group)) == 1
+    assert len(job_ids) == 1
 
 
 def test_permissive_verdicts_hold_on_pruned_consumers(spark, tmp_path):
@@ -511,3 +519,58 @@ def test_pipeline_persists_nothing():
         if re.search(r"\.(cache|persist)\(", line)
     ]
     assert not offenders, "\n".join(offenders)
+
+
+# --- parse on every core ----------------------------------------------------
+
+
+def _wide_csv(path, n_rows: int, bad_every: int) -> tuple[str, int, set[str]]:
+    """A CSV of `n_rows` fixed-width demo rows, every `bad_every`-th one and
+    the rows around each of Spark's split boundaries on 4 cores made
+    malformed (same width, unparseable `id`). Returns the path, the
+    good-row count and the malformed lines."""
+    header = "id,amount,label\n"
+
+    def good(i):
+        return f"{i:010d},{i % 100000:08d}.5,lab{i % 3}"
+
+    def bad(i):
+        return f"x{i:09d},{i % 100000:08d}.5,bad{i % 3}"
+
+    width = len(good(0)) + 1
+    size = len(header) + n_rows * width
+    split = max(FILE_SPLIT_FLOOR, (size + FILE_SPLIT_FLOOR) // 4)
+    near = set()
+    for boundary in range(split, size, split):
+        line = (boundary - len(header)) // width  # the line the boundary cuts
+        near.update(range(line - 1, line + 3))
+    malformed = {i for i in range(n_rows) if i % bad_every == bad_every - 1 or i in near}
+    lines = [bad(i) if i in malformed else good(i) for i in range(n_rows)]
+    path.write_text(header + "\n".join(lines) + "\n")
+    return str(path), n_rows - len(malformed), {bad(i) for i in malformed}
+
+
+def test_session_skips_column_call_site_capture(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_multi_mib_upload_parses_on_every_core(spark, tmp_path):
+    """A 3.5 MiB upload's one sink job parses in at least 3 tasks on
+    local[4] (at Spark's 4 MiB default floor it ran in 1), and the splits
+    change no count: every row is read once, malformed lines at the split
+    boundaries included, and only the first split drops the header."""
+    csv, n_good, malformed = _wide_csv(tmp_path / "wide.csv", 120_000, bad_every=997)
+    assert os.path.getsize(csv) >= 3 << 20
+    rc, audit, job_ids = _grouped_upload(spark, tmp_path, csv, _demo_spec())
+    assert rc == 0
+    (job_id,) = job_ids
+    status = spark.sparkContext.statusTracker()
+    tasks = sum(status.getStageInfo(s).numTasks for s in status.getJobInfo(job_id).stageIds)
+    assert tasks >= 3
+
+    record = audit.read_channel("upload-history")[-1]
+    assert (record["rowsLoaded"], record["rowsQuarantined"]) == (n_good, len(malformed))
+    loaded = spark.read.parquet(str(tmp_path / "demo_loaded"))
+    assert loaded.selectExpr("count(*)", "count(DISTINCT id)").first() == (n_good, n_good)
+    quarantined = [r.raw_record for r in ingest_csv(spark, csv, _demo_spec()).quarantine.collect()]
+    assert len(quarantined) == len(malformed) and set(quarantined) == malformed

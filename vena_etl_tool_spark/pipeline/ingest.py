@@ -20,6 +20,17 @@ so a file rewritten at the same path is read afresh. The observation also
 carries a pin metric over every spec column: without a cache it is what
 keeps Catalyst from pruning the CSV scan to the columns a consumer asks
 for, which would change the PERMISSIVE verdicts.
+
+Splits: the scan is splittable, so the session's file-split floor
+(``session.FILE_SPLIT_FLOOR``, 1 MiB in ``get_spark`` sessions) decides
+how many tasks parse one file: a 3.5 MiB upload parses in four tasks on
+four cores. Each split starts at the first whole line after its byte
+offset and reads past its end to finish its last line, so every row is
+parsed once, and only the split at offset 0 drops the header.
+
+The quarantine frame is built only when it is read
+(``IngestResult.quarantine``): an upload reads only the counts, and
+building the frame takes py4j round trips.
 """
 
 from __future__ import annotations
@@ -64,16 +75,16 @@ class IngestResult:
     """The split of one lazy, uncached CSV scan.
 
     ``observed`` is the scan with the count observation attached, before
-    the split; ``good`` and ``quarantine`` both derive from it. The counts
-    are read from ``observation``: ``write`` fills them with the sink's
-    own scan, and reading them before any write runs one noop write of
-    ``observed``. An action that stops early (``show``, ``limit``) also
-    fills the observation, with partial counts, so read the counts or
-    write before running one.
+    the split; ``good`` and ``quarantine`` both derive from it, the
+    quarantine only when it is read. The counts are read from
+    ``observation``: ``write`` fills them with the sink's own scan, and
+    reading them before any write runs one noop write of ``observed``.
+    An action that stops early (``show``, ``limit``) also fills the
+    observation, with partial counts, so read the counts or write before
+    running one.
     """
 
     good: DataFrame
-    quarantine: DataFrame
     observed: DataFrame
     observation: Observation
     _scan: str = field(default="pending", repr=False)  # pending | done | failed
@@ -82,6 +93,14 @@ class IngestResult:
     def write(self, path: str) -> None:
         """Sink ``good`` with ``write_table``; its one scan fills the counts."""
         self._run_scan(lambda: write_table(self.good, path))
+
+    @property
+    def quarantine(self) -> DataFrame:
+        """The corrupt rows' raw text and source file."""
+        return self.observed.filter(F.col(CORRUPT_COL).isNotNull()).select(
+            F.col(CORRUPT_COL).alias("raw_record"),
+            F.input_file_name().alias("source_file"),
+        )
 
     @property
     def n_good(self) -> int:
@@ -147,11 +166,7 @@ def ingest_csv(spark: SparkSession, path: str, spec: PipelineSpec) -> IngestResu
     if spec.column_mapping:
         for src, dst in spec.column_mapping.items():
             good = good.withColumnRenamed(src, dst)
-    quarantine = observed.filter(F.col(CORRUPT_COL).isNotNull()).select(
-        F.col(CORRUPT_COL).alias("raw_record"),
-        F.input_file_name().alias("source_file"),
-    )
-    return IngestResult(good, quarantine, observed, observation)
+    return IngestResult(good, observed, observation)
 
 
 def write_table(df: DataFrame, path: str, mode: str = "overwrite", fmt: str = "parquet") -> None:

@@ -31,6 +31,46 @@ from run to run; no cache size removes them. The cost is JVM metaspace:
 conf sizes each executor's cache too. A session built elsewhere and handed to
 ``configure()`` keeps its own size; ``configure()`` logs one warning per
 session when that size is below the constant.
+
+Class names without stage ids: ``RUNTIME_CONFS`` sets
+``spark.sql.codegen.useIdInClassName`` to false. By default each
+whole-stage class name carries its codegen stage id, and AQE numbers the
+same stage differently from run to run, so two identical fragments differ
+only in their class name and the second misses the cache. Without the id
+a repeated ``text_hll_cardinality`` at sf0.001 compiles no class; with it
+the repeat compiled 4-14 classes alone and 21 within a headline pass.
+
+File-split floor: :func:`get_spark` sets ``spark.sql.files.openCostInBytes``
+(Spark's assumed cost of opening a file, and in effect its smallest file
+split) to :data:`FILE_SPLIT_FLOOR`, 1 MiB instead of Spark's 4 MiB. A file
+scan's split size is ``min(maxPartitionBytes, max(openCost, (bytes +
+openCost) / cores))``, so a file smaller than ``openCost`` is always one
+task: at 4 MiB a 3 MiB CSV upload parsed on one core of four. A second
+split pays once each half parses for longer than one task's fixed cost,
+measured at about 25-60 ms (launch, the write task's binary with its
+Hadoop conf, the parquet writer's open and commit) against ~15 MiB/s per
+core of typed PERMISSIVE CSV parsing; that puts the break-even near
+1 MiB. The floor must stay above the largest gate-SF parquet file (sf0.01
+``lineitem.parquet``, 1,042,463 bytes) and the ``query_mix`` tables, so
+each still scans in one task. At sf0.1 the one-row-group files
+(``lineitem``, ``orders``, ``events``) gain extra split tasks that read
+no row group. Like the shuffle-partition pin it sizes a local run: on a
+deployer's cluster the object-store open cost is real, so the floor is
+set in the builder only and ``configure()`` leaves a handed-in session's
+value alone.
+
+Call-site capture off: :func:`get_spark` sets the static conf
+``spark.python.sql.dataFrameDebugging.enabled`` to false. By default
+PySpark records the Python ``file:line`` of every ``Column`` call, at the
+price of py4j round trips on each call. Turning it off cut one 2.8 MiB
+CSV upload from 356-525 round trips to 116-207, and one pass over the 10
+``query_mix`` queries from 4,190-4,918 to 2,099-2,314. What is
+traded away: an error that carries a DataFrame context, such as an ANSI
+``DIVIDE_BY_ZERO``, keeps its message, but its ``== DataFrame ==`` section
+names a JVM frame instead of the Python ``file:line`` of the ``Column``
+call. The conf is static (``spark.conf.set`` raises
+``CANNOT_MODIFY_STATIC_CONFIG``), so a session handed to ``configure()``
+keeps PySpark's default.
 """
 
 from __future__ import annotations
@@ -64,11 +104,18 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.join.preferSortMergeJoin": "false",
     # Arrow for pandas UDF / toPandas paths.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Generated-class names without the run-to-run codegen stage id, so a
+    # repeated plan hits the class cache: see the module docstring.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 # Static SQL conf, set in get_spark's builder: see the module docstring.
 CODEGEN_CACHE_ENTRIES = 8192
 _CODEGEN_CACHE_KEY = "spark.sql.codegen.cache.maxEntries"
+
+# Smallest file split of a local session, set in get_spark's builder only:
+# see the module docstring.
+FILE_SPLIT_FLOOR = 1 << 20
 
 _log = logging.getLogger(__name__)
 
@@ -193,7 +240,9 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.files.openCostInBytes", str(FILE_SPLIT_FLOOR))
         .config(_CODEGEN_CACHE_KEY, str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
