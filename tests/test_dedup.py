@@ -9,9 +9,9 @@ import pyspark.sql.functions as F
 import pytest
 
 from vena_etl_tool_spark.catalog import load_table
+from vena_etl_tool_spark.operators.crosshash import minhash_signature
 from vena_etl_tool_spark.operators.dedup import (
     minhash_lsh_pairs,
-    minhash_signature,
     doc_shingles,
     simhash_fingerprints,
 )
@@ -264,14 +264,14 @@ def test_band_key_plain_is_single_source_of_truth(spark, sf_dir):
     """lsh_bands(hashed_keys=False) and dedup_minhash_signatures' bk columns
     must emit byte-identical key strings — both now route through
     band_key_plain, and the DuckDB oracles rebuild that exact format."""
-    from vena_etl_tool_spark.operators.dedup import (
-        _doc_shingles,
+    from vena_etl_tool_spark.operators.crosshash import (
         lsh_bands,
-        md5_hash60,
+        md5_int as md5_hash60,
         minhash_signature,
         N_MINHASH,
         BAND_ROWS,
     )
+    from vena_etl_tool_spark.operators.dedup import _doc_shingles
 
     sig = minhash_signature(
         _doc_shingles(spark, sf_dir).limit(2000), "doc_id", "sh", hash_expr=md5_hash60
@@ -281,7 +281,7 @@ def test_band_key_plain_is_single_source_of_truth(spark, sf_dir):
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_list("band_key")).alias("keys"))
     )
-    from vena_etl_tool_spark.operators.dedup import band_key_plain
+    from vena_etl_tool_spark.operators.crosshash import band_key_plain
 
     via_cols = sig.select(
         "doc_id",
@@ -363,3 +363,21 @@ def test_containment_detects_embedded_doc(spark, tmp_path):
     r = rows[0]
     assert (r.doc_a, r.doc_b) == (0, 1)
     assert r.cont_b == 1.0 and r.direction == "b_in_a"
+
+
+def test_connected_components_releases_its_edge_cache(spark):
+    """connected_components caches the bidirectional edge list for its
+    rounds; every round's labels are a local checkpoint, so the returned
+    frame never reads that cache and the call leaves the session's cache
+    manager empty."""
+    from vena_etl_tool_spark.operators.dedup import connected_components
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5), (6, 5)], "a long, b long")
+    labels = connected_components(edges, "a", "b")
+    assert cache.isEmpty()
+    assert {r.node: r.label for r in labels.collect()} == {
+        1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 4,
+    }

@@ -285,14 +285,14 @@ def _minhash_expected(texts):
     candidate join, distinct-hash verify, rounded-Jaccard threshold."""
     import hashlib as _hl
 
-    from vena_etl_tool_spark.operators.dedup import (
-        _A,
-        _B,
+    from vena_etl_tool_spark.operators.crosshash import (
         BAND_ROWS,
-        LSH_MAX_BUCKET,
         MERSENNE,
         N_MINHASH,
+        PERM_A as _A,
+        PERM_B as _B,
     )
+    from vena_etl_tool_spark.operators.dedup import LSH_MAX_BUCKET
 
     hsets = {}
     sizes = {}

@@ -171,6 +171,38 @@ def test_http_sink_batches(spark, tmp_path):
     assert len(os.listdir(capture_dir)) == 4
 
 
+def test_http_sink_retries_each_failed_batch(spark, tmp_path):
+    """write_http runs post_with_retry on the executors: a transport that
+    answers 503 to each batch's first POST still lands every row, after
+    exactly one failed first attempt per batch (4 batches)."""
+    sent_dir, failed_dir = str(tmp_path / "sent"), str(tmp_path / "failed")
+    os.makedirs(sent_dir)
+    os.makedirs(failed_dir)
+
+    def flaky_transport(url, body, headers):
+        marker = os.path.join(failed_dir, headers["idempotency-key"])
+        if not os.path.exists(marker):
+            open(marker, "w").close()
+            return 503
+        with open(os.path.join(sent_dir, headers["idempotency-key"]), "wb") as f:
+            f.write(body)
+        return 200
+
+    df = spark.range(0, 20, 1, 2).selectExpr("id", "id * 2 AS doubled")
+    write_http(
+        df,
+        HttpSinkConfig(url="http://sink.test/batch", batch_size=7, backoff_s=0.0),
+        transport=flaky_transport,
+    )
+    rows = []
+    for fn in os.listdir(sent_dir):
+        with open(os.path.join(sent_dir, fn)) as f:
+            rows += [json.loads(line) for line in f if line.strip()]
+    assert sorted(r["id"] for r in rows) == list(range(20))
+    assert len(os.listdir(failed_dir)) == 4
+    assert sorted(os.listdir(failed_dir)) == sorted(os.listdir(sent_dir))
+
+
 def test_cli_end_to_end(tmp_path, csv_fixture, capsys):
     from vena_etl_tool_spark.pipeline import cli
 

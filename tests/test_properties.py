@@ -91,27 +91,40 @@ text_strategy = st.lists(
 @given(texts=text_strategy)
 @_settings
 def test_md5_hash60_is_cross_engine_exact(spark, texts):
-    """The md5-derived 60-bit hash — the foundation every minhash /
-    simhash / LSH oracle rests on — must agree byte-for-byte between
-    Spark and DuckDB for ARBITRARY unicode strings, not just fixture
-    shingles."""
+    """The md5 prefix integer — the foundation every minhash / simhash /
+    LSH / sampling / sketch oracle rests on — must agree byte-for-byte in
+    all three spellings (Spark Column, Spark SQL text, DuckDB SQL text)
+    and with Python's hashlib for ARBITRARY unicode strings, not just
+    fixture shingles, at 1, 12 and 15 hex digits."""
+    import hashlib
+
     import duckdb
 
-    from vena_etl_tool_spark.operators.dedup import md5_hash60
-
-    df = spark.createDataFrame([(t,) for t in texts], "s string")
-    spark_vals = sorted(
-        (r.s, r.h) for r in df.select("s", md5_hash60(F.col("s")).alias("h")).collect()
+    from vena_etl_tool_spark.operators.crosshash import (
+        duck_md5_int,
+        md5_int,
+        spark_md5_int,
     )
+
+    digits = (1, 12, 15)
+    df = spark.createDataFrame([(t,) for t in texts], "s string")
+    row = df.select(
+        "s",
+        *[md5_int(F.col("s"), d).alias(f"col{d}") for d in digits],
+        *[F.expr(spark_md5_int("s", d)).alias(f"sql{d}") for d in digits],
+    )
+    spark_rows = row.collect()
     con = duckdb.connect()
     con.execute("CREATE TABLE t (s VARCHAR)")
     con.executemany("INSERT INTO t VALUES (?)", [(t,) for t in texts])
-    duck_vals = sorted(
-        con.execute(
-            "SELECT s, ('0x' || substr(md5(s), 1, 15))::BIGINT FROM t"
-        ).fetchall()
-    )
-    assert spark_vals == duck_vals
+    for d in digits:
+        expect = sorted(
+            (t, int(hashlib.md5(t.encode()).hexdigest()[:d], 16)) for t in texts
+        )
+        assert sorted((r.s, r[f"col{d}"]) for r in spark_rows) == expect, d
+        assert sorted((r.s, r[f"sql{d}"]) for r in spark_rows) == expect, d
+        duck = con.execute(f"SELECT s, {duck_md5_int('s', d)} FROM t").fetchall()
+        assert sorted(duck) == expect, d
 
 
 @given(

@@ -197,5 +197,4 @@ def davg(col: Column | str, scale: int = 2) -> Column:
     Equivalent DuckDB SQL:
     ``CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE) / COUNT(x)``.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double") / F.count(c)
+    return dsum(col, scale) / F.count(col)

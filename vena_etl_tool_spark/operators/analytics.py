@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..catalog import load_table
 from ..registry import register
 from ._shared import dsum
+from .crosshash import duck_md5_int, md5_int
 
 
 @register(
@@ -1418,14 +1419,25 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# A/B arm of a user: A iff the first 48 bits of md5('ab:' || user_id) are
+# even — content-addressed, shared by the three experiment readouts.
+def _ab_variant() -> "F.Column":
+    u48 = md5_int(F.concat(F.lit("ab:"), F.col("user_id").cast("string")), 12)
+    return F.when(u48 % 2 == 0, "A").otherwise("B")
+
+
+def _ab_variant_duck(user_id: str) -> str:
+    u48 = duck_md5_int(f"'ab:' || CAST({user_id} AS VARCHAR)", 12)
+    return f"CASE WHEN {u48} % 2 = 0 THEN 'A' ELSE 'B' END"
+
+
 @register(
     "events_ab_test_readout",
     tags=("events", "analytics", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH assigned AS (
   SELECT user_id,
-         CASE WHEN ('0x' || substr(md5('ab:' || CAST(user_id AS VARCHAR)), 1, 12))::BIGINT % 2 = 0
-              THEN 'A' ELSE 'B' END AS variant
+         {_ab_variant_duck("user_id")} AS variant
   FROM events GROUP BY user_id
 ), metrics AS (
   SELECT a.variant,
@@ -1475,18 +1487,7 @@ def events_ab_test_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     significance-test layer (a z on two binomials) is driver-side
     arithmetic on this one output row at any data size."""
     ev = load_table(spark, sf_dir, "events")
-    variant = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0,
-        "A",
-    ).otherwise("B")
+    variant = _ab_variant()
     assigned = ev.select(
         "user_id",
         "event_type",
@@ -1588,8 +1589,7 @@ WITH bounds AS (
   FROM events
 ), per_user AS (
   SELECT e.user_id,
-         CASE WHEN ('0x' || substr(md5('ab:' || CAST(e.user_id AS VARCHAR)), 1, 12))::BIGINT % 2 = 0
-              THEN 'A' ELSE 'B' END AS variant,
+         {_ab_variant_duck("e.user_id")} AS variant,
          CAST(COALESCE(SUM(CASE WHEN e.event_type = 'purchase'
                    AND CAST(floor(epoch(e.ts)) AS BIGINT) <= b.mid_s
                    THEN CAST(CAST(e.value AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -1652,18 +1652,7 @@ def events_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = ev.agg(
         ((F.min(epoch_s) + F.max(epoch_s)) / 2).cast("long").alias("mid_s")
     )
-    variant = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0,
-        "A",
-    ).otherwise("B")
+    variant = _ab_variant()
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
     is_purchase = F.col("event_type") == "purchase"
     per_user = (
@@ -2002,8 +1991,7 @@ WITH bounds AS (
   FROM events
 ), per_user AS (
   SELECT e.user_id,
-         CASE WHEN ('0x' || substr(md5('ab:' || CAST(e.user_id AS VARCHAR)), 1, 12))::BIGINT % 2 = 0
-              THEN 'A' ELSE 'B' END AS variant,
+         {_ab_variant_duck("e.user_id")} AS variant,
          CAST(COALESCE(SUM(CASE WHEN e.event_type = 'purchase'
                    AND CAST(floor(epoch(e.ts)) AS BIGINT) <= b.mid_s
                    THEN CAST(CAST(e.value AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -2060,18 +2048,7 @@ def events_did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = ev.agg(
         ((F.min(epoch_s) + F.max(epoch_s)) / 2).cast("long").alias("mid_s")
     )
-    variant = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 2
-        == 0,
-        "A",
-    ).otherwise("B")
+    variant = _ab_variant()
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("long")
     is_purchase = F.col("event_type") == "purchase"
     per_user = (

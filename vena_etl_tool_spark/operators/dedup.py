@@ -6,16 +6,17 @@ Five dedup strategies, each designed as a shuffle-minimal Spark plan:
 - exact (hash group)               one shuffle on an 8-byte xxhash64 — the
                                    100 TB variant: the exchange carries a
                                    long, not the document body
-- n-gram Jaccard (oracle-checked)  shared-shingle blocking self-join —
+- n-gram Jaccard                   shared-shingle blocking self-join —
                                    never the O(n²) cross product
 - MinHash + LSH banding            signature → band bucket join; the
                                    standard sublinear near-dup pipeline
 - SimHash                          64-bit fingerprint + banded hamming join
 
-All hashing is JVM-side (xxhash64), zero Python in any hot path. The
-MinHash/SimHash queries return deterministic output (fixed hash seeds),
-but only the n-gram Jaccard is ANSI-SQL-expressible for the DuckDB oracle;
-the LSH families carry invariant unit tests instead (tests/test_dedup.py).
+All hashing is JVM-side, zero Python in any hot path. The scale path
+hashes with xxhash64; the registered MinHash/SimHash queries pass the md5
+bridge (``crosshash.md5_int``) instead, so their DuckDB oracles rebuild
+every signature, band key and fingerprint bit for bit. The MinHash
+permutations, band keys and their DuckDB twins live in ``crosshash``.
 """
 
 from __future__ import annotations
@@ -28,6 +29,21 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from ..catalog import load_table
 from ..registry import register
 from ._shared import persisted_artifact, spread_small
+from .crosshash import (
+    N_BANDS,
+    N_MINHASH,
+    band_key_plain,
+    duck_band_ctes,
+    duck_band_key,
+    duck_md5_int,
+    duck_minhash_mins,
+    lsh_bands,
+    mask31,
+    md5_int,
+    minhash_mins,
+    minhash_signature,
+    signature_col,
+)
 from .exact import (
     descale_sql,
     duck_dot_sql,
@@ -61,32 +77,6 @@ LSH_MAX_BUCKET = 50
 # _shared so plan-pin tests can flip it to inspect full logical plans.
 from ._shared import ckpt as _ckpt  # noqa: E402
 
-
-# MinHash parameters: 32 permutations in 8 bands of 4 rows.
-N_MINHASH = 32
-BAND_ROWS = 4
-MERSENNE = 2147483647  # 2^31 - 1
-# Deterministic permutation coefficients (a*h32 + b) mod p — seeds fixed so
-# signatures are stable across runs/executors.
-_A = [(17 + 13 * i) * 2654435761 % MERSENNE for i in range(N_MINHASH)]
-_B = [(31 + 7 * i) * 2246822519 % MERSENNE for i in range(N_MINHASH)]
-
-
-def md5_hash60(col: Column) -> Column:
-    """Cross-engine 60-bit shingle hash: top 15 hex chars of md5 as bigint.
-
-    Exists so the minhash queries can be ORACLE-EXACT: Spark's default
-    xxhash64 has no DuckDB equivalent, but md5 is bit-identical in both
-    (Spark: conv(substr(md5(x),1,15),16,10); DuckDB:
-    ('0x'||substr(md5(x),1,15))::BIGINT — verified equal). The scale path
-    keeps xxhash64 (~10× cheaper than md5); the hash choice changes no
-    plan shape, so the oracle still verifies the permutation/banding/
-    Jaccard logic that actually matters.
-    """
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-_SQL_MD5_H60 = "(('0x' || substr(md5({col}), 1, 15))::BIGINT)"
 
 # Shared DuckDB CTE: distinct 3-gram shingles per document (mirrors
 # doc_shingles below).
@@ -272,96 +262,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_signature(
-    df: DataFrame,
-    id_col: str,
-    shingle_col: str,
-    hash_expr: Callable[[Column], Column] | None = None,
-) -> DataFrame:
-    """(id, minhash array of N_MINHASH) from exploded (id, shingle) rows.
-
-    One shuffle (groupBy id); the N permutation mins are computed as N
-    aggregate columns over the same exchange — not N passes.
-    ``hash_expr`` defaults to xxhash64 (scale path); pass :func:`md5_hash60`
-    for the oracle-exact variant.
-    """
-    hfn = hash_expr or F.xxhash64
-    h32 = (hfn(F.col(shingle_col)).bitwiseAND(F.lit(0x7FFFFFFF))).alias("h32")
-    with_h = df.select(F.col(id_col), h32)
-    mins = [
-        F.min((F.col("h32") * F.lit(_A[i]) + F.lit(_B[i])) % F.lit(MERSENNE)).alias(
-            f"mh{i}"
-        )
-        for i in range(N_MINHASH)
-    ]
-    agg = with_h.groupBy(id_col).agg(*mins)
-    return agg.select(
-        F.col(id_col),
-        F.array(*[F.col(f"mh{i}") for i in range(N_MINHASH)]).alias("minhash"),
-    )
-
-
-def band_key_plain(sig_col: str, b: int) -> Column:
-    """The canonical plain band key, ``b:v0:v1:v2:v3`` — ONE definition
-    shared by lsh_bands and dedup_minhash_signatures so the string format
-    can never drift out of lockstep with the DuckDB oracles that rebuild
-    it character-for-character."""
-    return F.concat_ws(
-        ":",
-        F.lit(b),
-        *[
-            F.element_at(F.col(sig_col), b * BAND_ROWS + r + 1)
-            for r in range(BAND_ROWS)
-        ],
-    )
-
-
-def lsh_bands(
-    df: DataFrame, id_col: str, sig_col: str = "minhash", hashed_keys: bool = True
-) -> DataFrame:
-    """Explode a minhash signature into (id, band_id, band_key) bucket rows.
-
-    ``hashed_keys=True`` (scale default) compresses each band's 4 values to
-    one xxhash64 long — an 8-byte shuffle key. ``False`` keeps the plain
-    ``b:v0:v1:v2:v3`` string so DuckDB can rebuild identical keys.
-    """
-    n_bands = N_MINHASH // BAND_ROWS
-
-    def key(b: int) -> Column:
-        plain = band_key_plain(sig_col, b)
-        return F.xxhash64(plain) if hashed_keys else plain
-
-    bands = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_id"), key(b).alias("band_key"))
-            for b in range(n_bands)
-        ]
-    )
-    return df.select(F.col(id_col), F.explode(bands).alias("bk")).select(
-        id_col, F.col("bk.band_id").alias("band_id"), F.col("bk.band_key").alias("band_key")
-    )
-
-
 def _minhash_sig_oracle() -> str:
-    h60 = _SQL_MD5_H60.format(col="sh")
-    mins = ",\n         ".join(
-        f"MIN((({h60} & 2147483647) * {_A[i]} + {_B[i]}) % {MERSENNE}) AS mh{i}"
-        for i in range(N_MINHASH)
-    )
-    bks = ",\n       ".join(
-        "("
-        + " || ':' || ".join(
-            [f"'{b}'"]
-            + [f"CAST(mh{b * BAND_ROWS + r} AS VARCHAR)" for r in range(BAND_ROWS)]
-        )
-        + f") AS bk{b}"
-        for b in range(N_MINHASH // BAND_ROWS)
-    )
+    bks = ",\n       ".join(f"{duck_band_key(b)} AS bk{b}" for b in range(N_BANDS))
     return f"""
 WITH {_SQL_SHINGLES_CTE},
 mins AS (
   SELECT doc_id,
-         {mins}
+         {duck_minhash_mins(duck_md5_int("sh"))}
   FROM sh GROUP BY doc_id
 )
 SELECT doc_id,
@@ -382,54 +289,30 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle keys for candidate generation.
 
     Oracle-exact (r2 verdict stretch #10): the shingle hash here is
-    :func:`md5_hash60` — bit-identical in Spark and DuckDB — so the driver
+    ``crosshash.md5_int`` — bit-identical in Spark and DuckDB — so the driver
     verifies the whole permutation + banding pipeline, not just row counts.
     The scale deployment swaps in xxhash64 (same plan, cheaper hash) via
-    :func:`minhash_signature`'s ``hash_expr``. Output is flat scalar
+    ``minhash_signature``'s ``hash_expr``. Output is flat scalar
     columns (mh0..mh31, bk0..bk7) so the harness can value-hash it."""
     sh = _doc_shingles(spark, sf_dir)
-    sig = minhash_signature(sh, "doc_id", "sh", hash_expr=md5_hash60)
+    sig = minhash_signature(sh, "doc_id", "sh", hash_expr=md5_int)
     mh = [F.element_at("minhash", i + 1).alias(f"mh{i}") for i in range(N_MINHASH)]
-    bks = [
-        band_key_plain("minhash", b).alias(f"bk{b}")
-        for b in range(N_MINHASH // BAND_ROWS)
-    ]
+    bks = [band_key_plain("minhash", b).alias(f"bk{b}") for b in range(N_BANDS)]
     return sig.select("doc_id", *mh, *bks)
 
 
 def _minhash_pairs_oracle(
     jaccard_threshold: float = 0.5, max_bucket: int = LSH_MAX_BUCKET
 ) -> str:
-    h60 = _SQL_MD5_H60.format(col="sh")
-    mins = ",\n         ".join(
-        f"MIN(((h & 2147483647) * {_A[i]} + {_B[i]}) % {MERSENNE}) AS mh{i}"
-        for i in range(N_MINHASH)
-    )
-    band_rows = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {b} AS band_id, ("
-        + " || ':' || ".join(
-            [f"'{b}'"]
-            + [f"CAST(mh{b * BAND_ROWS + r} AS VARCHAR)" for r in range(BAND_ROWS)]
-        )
-        + ") AS band_key FROM mins"
-        for b in range(N_MINHASH // BAND_ROWS)
-    )
     return f"""
 WITH {_SQL_SHINGLES_CTE},
-h AS (SELECT doc_id, {h60} AS h FROM sh),
+h AS (SELECT doc_id, {duck_md5_int("sh")} AS h FROM sh),
 mins AS (
   SELECT doc_id,
-         {mins}
+         {duck_minhash_mins("h")}
   FROM h GROUP BY doc_id
 ),
-bands AS (
-{band_rows}
-),
-bcap AS (
-  SELECT band_id, band_key FROM bands
-  GROUP BY band_id, band_key HAVING COUNT(*) <= {max_bucket}
-),
-bf AS (SELECT b.* FROM bands b JOIN bcap USING (band_id, band_key)),
+{duck_band_ctes("mins", "bf", max_bucket)},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bf a JOIN bf b
@@ -469,11 +352,11 @@ def dedup_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     are guaranteed true near-dups (tested invariant).
 
     Oracle-exact via the md5-based cross-engine hash + plain-string band
-    keys (DuckDB rebuilds both bit-for-bit — see md5_hash60); the scale
+    keys (DuckDB rebuilds both bit-for-bit — see ``crosshash``); the scale
     path keeps xxhash64 + 8-byte hashed band keys, same plan shape."""
     return minhash_lsh_pairs(
         spread_small(load_table(spark, sf_dir, "documents")),
-        hash_expr=md5_hash60,
+        hash_expr=md5_int,
         hashed_band_keys=False,
     )
 
@@ -500,23 +383,8 @@ def minhash_lsh_pairs(
     larger than the limit (bounded recall loss — exact dedup upstream
     should have removed mass-duplicate text already).
     """
-    hfn = hash_expr or F.xxhash64
-    sh = doc_shingles(docs)
-    with_h = sh.select("doc_id", hfn(F.col("sh")).alias("h64"))
-    h32 = F.col("h64").bitwiseAND(F.lit(0x7FFFFFFF))
-    mins = [
-        F.min((h32 * F.lit(_A[i]) + F.lit(_B[i])) % F.lit(MERSENNE)).alias(f"mh{i}")
-        for i in range(N_MINHASH)
-    ]
-    per_doc = with_h.groupBy("doc_id").agg(
-        *mins,
-        F.collect_list("h64").alias("hs"),  # shingles are pre-distinct
-        F.count(F.lit(1)).alias("n_sh"),
-    ).cache()
-    sig = per_doc.select(
-        "doc_id", F.array(*[F.col(f"mh{i}") for i in range(N_MINHASH)]).alias("minhash")
-    )
-    bands = lsh_bands(sig, "doc_id", hashed_keys=hashed_band_keys)
+    per_doc = _minhash_per_doc(docs, hash_expr or F.xxhash64).cache()
+    bands = _per_doc_bands(per_doc, hashed_keys=hashed_band_keys)
     if max_bucket_size is not None:
         # hot-bucket count via a window over the same (band_id, band_key)
         # partitioning the candidate self-join shuffles on anyway — one
@@ -569,7 +437,6 @@ def minhash_lsh_pairs(
 
 
 def _simhash_oracle(n_bits: int = 60) -> str:
-    h60 = _SQL_MD5_H60.format(col="tok")
     bit_sums = ",\n         ".join(
         f"SUM(CASE WHEN (th >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
         for i in range(n_bits)
@@ -587,7 +454,7 @@ def _simhash_oracle(n_bits: int = 60) -> str:
 WITH t AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
 ),
-h AS (SELECT doc_id, {h60} AS th FROM t),
+h AS (SELECT doc_id, {duck_md5_int("tok")} AS th FROM t),
 bits AS (
   SELECT doc_id,
          {bit_sums}
@@ -614,11 +481,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     so banding gives the same equi-join candidate structure as MinHash-LSH.
 
     Oracle-exact: this entry uses the 60-bit md5-based cross-engine hash
-    (md5_hash60) so DuckDB rebuilds the identical fingerprint; the scale
-    path keeps 64-bit xxhash64 via the core's defaults (same plan)."""
+    (``crosshash.md5_int``) so DuckDB rebuilds the identical fingerprint;
+    the scale path keeps 64-bit xxhash64 via the core's defaults (same
+    plan)."""
     return simhash_fingerprints(
         spread_small(load_table(spark, sf_dir, "documents")),
-        hash_expr=md5_hash60,
+        hash_expr=md5_int,
         n_bits=60,
     )
 
@@ -631,7 +499,7 @@ def simhash_fingerprints(
     """SimHash core over any (doc_id, text) DataFrame (reusable for tests).
 
     ``n_bits`` must be divisible by 4 (band split); defaults to 64-bit
-    xxhash64 — pass (md5_hash60, 60) for the oracle-exact variant.
+    xxhash64 — pass (md5_int, 60) for the oracle-exact variant.
     """
     hfn = hash_expr or F.xxhash64
     toks = docs.select(
@@ -1053,6 +921,9 @@ def connected_components(edges: DataFrame, src: str, dst: str, max_iter: int = 2
         labels = updated.select("node", "label")
         if changed == 0:
             break
+    # every round's labels are a materialized local checkpoint, so nothing
+    # reads the edge cache after the loop
+    bidir.unpersist()
     return labels
 
 
@@ -1365,7 +1236,7 @@ def corpus_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .withColumn("is_exact", F.lit(True))
     )
-    pairs = minhash_lsh_pairs(docs, hash_expr=md5_hash60, hashed_band_keys=False)
+    pairs = minhash_lsh_pairs(docs, hash_expr=md5_int, hashed_band_keys=False)
     near_rej = (
         pairs.filter((F.col("doc_a") % 4 == 0) != (F.col("doc_b") % 4 == 0))
         .select(
@@ -1393,26 +1264,10 @@ def _incremental_persisted_oracle(max_bucket: int = INCR_BAND_CAP) -> str:
     variant, but candidate generation is new-bands ⋈ OLD-bands with the
     hot-bucket cap computed over the OLD side only (state compaction —
     the cap you can actually apply to yesterday's persisted buckets)."""
-    h60 = _SQL_MD5_H60.format(col="sh")
-    mins = ",\n         ".join(
-        f"MIN(((h & 2147483647) * {_A[i]} + {_B[i]}) % {MERSENNE}) AS mh{i}"
-        for i in range(N_MINHASH)
-    )
-
-    def band_rows(src: str) -> str:
-        return "\n  UNION ALL\n".join(
-            f"  SELECT doc_id, {b} AS band_id, ("
-            + " || ':' || ".join(
-                [f"'{b}'"]
-                + [f"CAST(mh{b * BAND_ROWS + r} AS VARCHAR)" for r in range(BAND_ROWS)]
-            )
-            + f") AS band_key FROM {src}"
-            for b in range(N_MINHASH // BAND_ROWS)
-        )
-
+    mins = duck_minhash_mins("h")
     return f"""
 WITH {_SQL_SHINGLES_CTE},
-h AS (SELECT doc_id, {h60} AS h FROM sh),
+h AS (SELECT doc_id, {duck_md5_int("sh")} AS h FROM sh),
 oldh AS (SELECT * FROM h WHERE doc_id % 4 <> 0),
 newh AS (SELECT * FROM h WHERE doc_id % 4 = 0),
 oldmins AS (
@@ -1425,17 +1280,8 @@ newmins AS (
          {mins}
   FROM newh GROUP BY doc_id
 ),
-oldbands AS (
-{band_rows("oldmins")}
-),
-newbands AS (
-{band_rows("newmins")}
-),
-obcap AS (
-  SELECT band_id, band_key FROM oldbands
-  GROUP BY band_id, band_key HAVING COUNT(*) <= {max_bucket}
-),
-obf AS (SELECT b.* FROM oldbands b JOIN obcap USING (band_id, band_key)),
+{duck_band_ctes("oldmins", "obf", max_bucket)},
+{duck_band_ctes("newmins", "newbands", None)},
 cand AS (
   SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
   FROM newbands n JOIN obf o
@@ -1521,28 +1367,22 @@ def incr_state_dir(sf_dir: str) -> str:
     return layout_dir(sf_dir, "incremental_state")
 
 
-def _minhash_per_doc(docs: DataFrame) -> DataFrame:
+def _minhash_per_doc(
+    docs: DataFrame, hash_expr: Callable[[Column], Column] = md5_int
+) -> DataFrame:
     """(doc_id, mh0..mh31, hs, n_sh) — signature mins + shingle-hash set
-    in ONE aggregate over exploded shingles (md5 cross-engine hash)."""
-    sh = doc_shingles(docs)
-    with_h = sh.select("doc_id", md5_hash60(F.col("sh")).alias("h64"))
-    h32 = F.col("h64").bitwiseAND(F.lit(0x7FFFFFFF))
-    mins = [
-        F.min((h32 * F.lit(_A[i]) + F.lit(_B[i])) % F.lit(MERSENNE)).alias(f"mh{i}")
-        for i in range(N_MINHASH)
-    ]
+    in ONE aggregate over exploded shingles (md5 cross-engine hash by
+    default)."""
+    with_h = doc_shingles(docs).select("doc_id", hash_expr(F.col("sh")).alias("h64"))
     return with_h.groupBy("doc_id").agg(
-        *mins,
+        *minhash_mins(mask31(F.col("h64"))),
         F.collect_list("h64").alias("hs"),  # shingles are pre-distinct
         F.count(F.lit(1)).alias("n_sh"),
     )
 
 
 def _per_doc_bands(per_doc: DataFrame, hashed_keys: bool = False) -> DataFrame:
-    sig = per_doc.select(
-        "doc_id",
-        F.array(*[F.col(f"mh{i}") for i in range(N_MINHASH)]).alias("minhash"),
-    )
+    sig = per_doc.select("doc_id", signature_col())
     return lsh_bands(sig, "doc_id", hashed_keys=hashed_keys)
 
 
@@ -2285,20 +2125,6 @@ LSH_AUDIT_STRATUM_MOD = 2
 def _lsh_recall_audit_oracle(
     max_bucket: int = LSH_MAX_BUCKET, stratum_mod: int | None = None
 ) -> str:
-    h60 = _SQL_MD5_H60.format(col="sh")
-    mins = ",\n         ".join(
-        f"MIN(((h & 2147483647) * {_A[i]} + {_B[i]}) % {MERSENNE}) AS mh{i}"
-        for i in range(N_MINHASH)
-    )
-    band_rows = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {b} AS band_id, ("
-        + " || ':' || ".join(
-            [f"'{b}'"]
-            + [f"CAST(mh{b * BAND_ROWS + r} AS VARCHAR)" for r in range(BAND_ROWS)]
-        )
-        + ") AS band_key FROM mins"
-        for b in range(N_MINHASH // BAND_ROWS)
-    )
     shingles = _SQL_SHINGLES_CTE.replace("FROM documents", "FROM reps")
     jac = "ROUND(CAST(i.inter AS DOUBLE) / (sa.n + sb.n - i.inter), 6)"
     stratum = (
@@ -2308,7 +2134,7 @@ def _lsh_recall_audit_oracle(
 WITH reps AS (
   SELECT MIN(doc_id) AS doc_id, text FROM documents GROUP BY text{stratum}
 ), {shingles},
-h AS (SELECT doc_id, {h60} AS h FROM sh),
+h AS (SELECT doc_id, {duck_md5_int("sh")} AS h FROM sh),
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM h GROUP BY doc_id),
 cool AS (
   SELECT h FROM h GROUP BY h HAVING COUNT(*) <= {SHINGLE_DF_CAP}
@@ -2333,17 +2159,10 @@ truth AS (
 ),
 mins AS (
   SELECT doc_id,
-         {mins}
+         {duck_minhash_mins("h")}
   FROM h GROUP BY doc_id
 ),
-bands AS (
-{band_rows}
-),
-bcap AS (
-  SELECT band_id, band_key FROM bands
-  GROUP BY band_id, band_key HAVING COUNT(*) <= {max_bucket}
-),
-bf AS (SELECT b.* FROM bands b JOIN bcap USING (band_id, band_key)),
+{duck_band_ctes("mins", "bf", max_bucket)},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bf a JOIN bf b
@@ -2406,13 +2225,8 @@ def _lsh_recall_audit_df(
     # recall at all, and the sampled-stratum note below is the 100 TB
     # answer.
     with_h = doc_shingles(docs).select(
-        "doc_id", md5_hash60(F.col("sh")).alias("h")
+        "doc_id", md5_int(F.col("sh")).alias("h")
     ).cache()
-    h32 = F.col("h").bitwiseAND(F.lit(0x7FFFFFFF))
-    mins = [
-        F.min((h32 * F.lit(_A[i]) + F.lit(_B[i])) % F.lit(MERSENNE)).alias(f"mh{i}")
-        for i in range(N_MINHASH)
-    ]
     # OPTIMIZATION r11: per_doc feeds FIVE consumers (truth sets ×2,
     # verify sets ×2, the signature side) and the final summary row fans
     # out into four single-row aggregates — without truncation each
@@ -2426,7 +2240,7 @@ def _lsh_recall_audit_df(
         with_h.groupBy("doc_id").agg(
             F.collect_list("h").alias("hs"),
             F.count(F.lit(1)).alias("n"),
-            *mins,
+            *minhash_mins(mask31(F.col("h"))),
         )
     )
     # --- blocked exact truth ---
@@ -2451,11 +2265,7 @@ def _lsh_recall_audit_df(
         F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"), F.col("n").alias("nb")
     )
     # --- LSH candidates (the production pipeline's shape) ---
-    sig = per_doc.select(
-        "doc_id",
-        F.array(*[F.col(f"mh{i}") for i in range(N_MINHASH)]).alias("minhash"),
-    )
-    bands = lsh_bands(sig, "doc_id", hashed_keys=False)
+    bands = _per_doc_bands(per_doc)
     bsz_w = Window.partitionBy("band_id", "band_key")
     bands = (
         bands.withColumn("_bsz", F.count(F.lit(1)).over(bsz_w))

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..catalog import load_table
 from ..registry import register
 from ._shared import dsum
+from .crosshash import duck_md5_int, spark_md5_int
 
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -335,9 +336,7 @@ def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 SHARDS_BEFORE = 8
 SHARDS_AFTER = 9
 
-_HRW_H_DUCK = (
-    "('0x' || substr(md5(doc_id::VARCHAR || '#' || s::VARCHAR), 1, 15))::BIGINT"
-)
+_HRW_H_DUCK = duck_md5_int("doc_id::VARCHAR || '#' || s::VARCHAR")
 
 _HRW_ORACLE = f"""
 WITH h AS (
@@ -387,10 +386,7 @@ def layout_rendezvous_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
 
     def weight(s: int):
-        return F.expr(
-            f"CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), '#', '{s}')),"
-            f" 1, 15), 16, 10) AS BIGINT)"
-        )
+        return F.expr(spark_md5_int(f"concat(CAST(doc_id AS STRING), '#', '{s}')"))
 
     arr = F.array(
         *[
@@ -450,8 +446,7 @@ ZM_LO, ZM_HI = 1095, 1185  # predicate window in epoch days (~1995 Q1)
 
 _ZONEMAP_ORACLE = f"""
 WITH rows_keyed AS (
-  SELECT ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15))::BIGINT
-           % {ZM_SHARDS} AS hash_shard,
+  SELECT {duck_md5_int("CAST(l_orderkey AS VARCHAR)")} % {ZM_SHARDS} AS hash_shard,
          datediff('day', {ZM_EPOCH}, CAST(l_shipdate AS DATE)) AS ship_day
   FROM lineitem
 ), tagged AS (
@@ -501,8 +496,7 @@ def layout_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard uses the md5 60-bit bridge so both engines agree bit-for-bit."""
     li = load_table(spark, sf_dir, "lineitem").select(
         F.expr(
-            f"CAST(conv(substr(md5(CAST(l_orderkey AS STRING)), 1, 15), 16, 10)"
-            f" AS BIGINT) % {ZM_SHARDS}"
+            f"{spark_md5_int('CAST(l_orderkey AS STRING)')} % {ZM_SHARDS}"
         ).alias("hash_shard"),
         F.expr(f"datediff(CAST(l_shipdate AS DATE), {ZM_EPOCH})").alias(
             "ship_day"
@@ -536,8 +530,7 @@ def layout_zonemap_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _OVERLAP_DEPTH_ORACLE = f"""
 WITH rows_keyed AS (
-  SELECT ('0x' || substr(md5(CAST(l_orderkey AS VARCHAR)), 1, 15))::BIGINT
-           % {ZM_SHARDS} AS hash_shard,
+  SELECT {duck_md5_int("CAST(l_orderkey AS VARCHAR)")} % {ZM_SHARDS} AS hash_shard,
          datediff('day', {ZM_EPOCH}, CAST(l_shipdate AS DATE)) AS ship_day
   FROM lineitem
 ), tagged AS (
@@ -601,8 +594,7 @@ def layout_overlap_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.expr(
-            f"CAST(conv(substr(md5(CAST(l_orderkey AS STRING)), 1, 15), 16, 10)"
-            f" AS BIGINT) % {ZM_SHARDS}"
+            f"{spark_md5_int('CAST(l_orderkey AS STRING)')} % {ZM_SHARDS}"
         ).alias("hash_shard"),
         F.expr(f"datediff(CAST(l_shipdate AS DATE), {ZM_EPOCH})").alias(
             "ship_day"

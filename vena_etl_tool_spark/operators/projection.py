@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..catalog import load_table
 from ..registry import register
 from ._shared import dsum
+from .crosshash import duck_md5_int, md5_int, md5_prefix, sql_md5_prefix
 
 
 @register(
@@ -143,12 +144,11 @@ def drop_duplicates_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sample_stratified",
     tags=("projection", "sampling"),
-    oracle="""
+    oracle=f"""
 WITH sampled AS (
   SELECT c_mktsegment, c_custkey, c_acctbal
   FROM customer
-  WHERE substr(md5(CAST(c_custkey AS VARCHAR)), 1, 1)
-          IN ('0','1','2','3')
+  WHERE {sql_md5_prefix("CAST(c_custkey AS VARCHAR)", 1)} IN ('0','1','2','3')
 )
 SELECT c_mktsegment, COUNT(*) AS n_sampled,
        CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS bal_sum
@@ -165,7 +165,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan with zero shuffle — the only shuffle here is the verification
     rollup."""
     cust = load_table(spark, sf_dir, "customer")
-    first_hex = F.substring(F.md5(F.col("c_custkey").cast("string")), 1, 1)
+    first_hex = md5_prefix(F.col("c_custkey").cast("string"), 1)
     return (
         cust.filter(first_hex.isin("0", "1", "2", "3"))
         .groupBy("c_mktsegment")
@@ -198,7 +198,7 @@ WSAMPLE_REF = 50  # weight cap: docs with >= 50 distinct tokens always kept
 WITH weighted AS (
   SELECT doc_id, source,
          LEAST(len(list_distinct(string_split(text, ' '))), {WSAMPLE_REF}) AS w,
-         ('0x' || substr(md5('wsample:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT AS u48
+         {duck_md5_int("'wsample:' || CAST(doc_id AS VARCHAR)", 12)} AS u48
   FROM documents
 )
 SELECT doc_id, source, CAST(w AS BIGINT) AS weight
@@ -222,15 +222,7 @@ def sample_weighted_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = F.least(
         F.size(F.array_distinct(F.split("text", " "))), F.lit(WSAMPLE_REF)
     )
-    u48 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("wsample:"), F.col("doc_id").cast("string"))),
-            1,
-            12,
-        ),
-        16,
-        10,
-    ).cast("long")
+    u48 = md5_int(F.concat(F.lit("wsample:"), F.col("doc_id").cast("string")), 12)
     return (
         docs.select("doc_id", "source", w.alias("w"), u48.alias("u48"))
         .filter(F.col("u48") * WSAMPLE_REF < F.col("w") * F.lit(281474976710656))

@@ -26,6 +26,7 @@ from ..catalog import load_table
 from ..registry import register
 from ._shared import ckpt as _ckpt
 from ._shared import persisted_artifact, spread_small
+from .crosshash import duck_md5_int, md5_int
 from .exact import (
     descale,
     descale_sql,
@@ -3720,8 +3721,7 @@ HNSW_L1_HOPS = 3  # greedy hops on layer 1 (the coarse descent)
 HNSW_L0_HOPS = 3  # greedy hops on layer 0, seeded by the layer-1 terminal
 
 _HNSW_LVL_DUCK = (
-    "('0x' || substr(md5('lvl:' || CAST(vec_id AS VARCHAR)), 1, 12))::BIGINT"
-    f" % {HNSW_SKIP} = 0"
+    duck_md5_int("'lvl:' || CAST(vec_id AS VARCHAR)", 12) + f" % {HNSW_SKIP} = 0"
 )
 
 
@@ -3850,14 +3850,7 @@ def _hnsw_l1_members_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cent"),
     )
     lvl = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("lvl:"), F.col("vec_id").cast("string"))), 1, 12
-            ),
-            16,
-            10,
-        ).cast("long")
-        % HNSW_SKIP
+        md5_int(F.concat(F.lit("lvl:"), F.col("vec_id").cast("string")), 12) % HNSW_SKIP
         == 0
     )
     return assigned.filter(lvl)

@@ -15,6 +15,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from ..catalog import load_table
 from ..registry import register
 from ._shared import spread_small
+from .crosshash import (
+    SPLIT_CASE_SQL,
+    duck_band_ctes,
+    duck_md5_int,
+    duck_minhash_mins,
+    md5_int,
+    spark_md5_int,
+    split_assign_col,
+)
 
 # tiny deterministic stopword list used by the quality score
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
@@ -317,14 +326,9 @@ def udtf_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dataset_split_assign",
     tags=("llm", "text", "splitting"),
-    oracle="""
+    oracle=f"""
 WITH assigned AS (
-  SELECT doc_id, lang,
-         CASE
-           WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0','1','2','3','4','5','6','7','8','9','a','b') THEN 'train'
-           WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('c','d') THEN 'val'
-           ELSE 'test'
-         END AS split
+  SELECT doc_id, lang, {SPLIT_CASE_SQL} AS split
   FROM documents
 )
 SELECT split, lang, COUNT(*) AS n
@@ -338,8 +342,9 @@ def dataset_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     training corpora: no RNG state, stable under re-partitioning and
     re-runs, reproducible across engines — md5 is the cross-engine
     contract (vs seeded rand(), which is partitioning-dependent).
-    The rule itself is split_assign_col(), shared with the
-    dataset_split_leakage audit so the two cannot drift."""
+    The rule itself is ``crosshash.split_assign_col``, shared with the
+    curation pipelines and the dataset_split_leakage audit so they cannot
+    drift."""
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(split_assign_col().alias("split"), "lang")
@@ -405,12 +410,7 @@ WITH dedup AS (
 SELECT split, predicted_lang, COUNT(*) AS n_docs,
        CAST(SUM(n_tok) AS BIGINT) AS n_tokens
 FROM (
-  SELECT *,
-         CASE
-           WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0','1','2','3','4','5','6','7','8','9','a','b') THEN 'train'
-           WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('c','d') THEN 'val'
-           ELSE 'test'
-         END AS split
+  SELECT *, {SPLIT_CASE_SQL} AS split
   FROM gated
 )
 GROUP BY split, predicted_lang
@@ -465,12 +465,7 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         feats.filter(F.col("n_tok").between(20, 1000) & (F.col("_diversity") > 0.2))
         .withColumn("predicted_lang", predicted)
     )
-    first_hex = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    split = (
-        F.when(first_hex.isin(*"0123456789ab"), "train")
-        .when(first_hex.isin("c", "d"), "val")
-        .otherwise("test")
-    )
+    split = split_assign_col()
     return (
         gated.select(split.alias("split"), "predicted_lang", "n_tok")
         .groupBy("split", "predicted_lang")
@@ -885,22 +880,8 @@ def _flagship_oracle() -> str:
     a fragment already proven on its single-operator query (exact-dedup
     window, md5-h60 minhash + banding + capped buckets + Jaccard verify,
     quality gate, md5 split, packing arithmetic)."""
-    from .dedup import _A, _B, _SQL_MD5_H60, BAND_ROWS, MERSENNE, N_MINHASH
+    from .dedup import LSH_MAX_BUCKET
 
-    h60 = _SQL_MD5_H60.format(col="sh")
-    mins = ",\n         ".join(
-        f"MIN(((h & 2147483647) * {_A[i]} + {_B[i]}) % {MERSENNE}) AS mh{i}"
-        for i in range(N_MINHASH)
-    )
-    band_rows = "\n  UNION ALL\n".join(
-        f"  SELECT doc_id, {b} AS band_id, ("
-        + " || ':' || ".join(
-            [f"'{b}'"]
-            + [f"CAST(mh{b * BAND_ROWS + r} AS VARCHAR)" for r in range(BAND_ROWS)]
-        )
-        + ") AS band_key FROM mins"
-        for b in range(N_MINHASH // BAND_ROWS)
-    )
     L = PACK_SEQ_LEN
     return f"""
 WITH valid AS (
@@ -917,20 +898,13 @@ shl AS (
   )) AS sh
   FROM kw WHERE len(words) >= 3
 ),
-h AS (SELECT doc_id, {h60} AS h FROM shl),
+h AS (SELECT doc_id, {duck_md5_int("sh")} AS h FROM shl),
 mins AS (
   SELECT doc_id,
-         {mins}
+         {duck_minhash_mins("h")}
   FROM h GROUP BY doc_id
 ),
-bands AS (
-{band_rows}
-),
-bcap AS (
-  SELECT band_id, band_key FROM bands
-  GROUP BY band_id, band_key HAVING COUNT(*) <= 50
-),
-bf AS (SELECT b.* FROM bands b JOIN bcap USING (band_id, band_key)),
+{duck_band_ctes("mins", "bf", LSH_MAX_BUCKET)},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bf a JOIN bf b
@@ -965,13 +939,7 @@ gated AS (
         / len(string_split(text, ' ')) > 0.2
 ),
 assigned AS (
-  SELECT source, n_tok,
-         CASE
-           WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-                IN ('0','1','2','3','4','5','6','7','8','9','a','b') THEN 'train'
-           WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('c','d') THEN 'val'
-           ELSE 'test'
-         END AS split
+  SELECT source, n_tok, {SPLIT_CASE_SQL} AS split
   FROM gated
 )
 SELECT split, source, COUNT(*) AS n_docs,
@@ -996,8 +964,8 @@ def pipeline_pretrain_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
       quarantine gate (null/blank text)
         → exact dedup (keep lowest doc_id per text)
         → MinHash-LSH near-dup removal (md5-h60 perms, banded candidates,
-          hot-bucket cap 50, exact-Jaccard ≥ 0.5 verify; drop the higher
-          doc of each verified pair)
+          hot-bucket cap LSH_MAX_BUCKET, exact-Jaccard ≥ 0.5 verify;
+          drop the higher doc of each verified pair)
         → quality gate (20 ≤ tokens ≤ 1000, lexical diversity > 0.2)
         → content-addressed train/val/test split (md5 of doc_id)
         → packed-sequence accounting per (split, source)
@@ -1016,7 +984,7 @@ def pipeline_pretrain_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     need NO window: total offset per (split, source) is just
     SUM(n_tok + 1), so the per-doc packing window (dataset_pack_sequences)
     is only paid when per-doc spans are the deliverable."""
-    from .dedup import md5_hash60, minhash_lsh_pairs
+    from .dedup import LSH_MAX_BUCKET, minhash_lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
     valid = docs.filter(
@@ -1029,8 +997,8 @@ def pipeline_pretrain_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("_rn")
     )
     pairs = minhash_lsh_pairs(
-        kept, jaccard_threshold=0.5, max_bucket_size=50,
-        hash_expr=md5_hash60, hashed_band_keys=False,
+        kept, jaccard_threshold=0.5, max_bucket_size=LSH_MAX_BUCKET,
+        hash_expr=md5_int, hashed_band_keys=False,
     )
     drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     survivors = kept.join(drops, "doc_id", "left_anti")
@@ -1045,12 +1013,7 @@ def pipeline_pretrain_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_tok").between(20, 1000) & (F.col("_div") > 0.2))
     )
-    first_hex = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    split = (
-        F.when(first_hex.isin(*"0123456789ab"), "train")
-        .when(first_hex.isin("c", "d"), "val")
-        .otherwise("test")
-    )
+    split = split_assign_col()
     return (
         gated.select(split.alias("split"), "source", "n_tok")
         .groupBy("split", "source")
@@ -1127,7 +1090,7 @@ def text_token_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dataset_mixture_sample",
     tags=("llm", "sampling", "splitting"),
-    oracle="""
+    oracle=f"""
 WITH per_domain AS (
   SELECT lang, source,
          CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -1144,7 +1107,7 @@ rates AS (
 SELECT d.doc_id, d.lang, d.source,
        len(string_split(d.text, ' ')) AS n_tok
 FROM documents d JOIN rates r ON d.lang = r.lang AND d.source = r.source
-WHERE CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT
+WHERE CAST({duck_md5_int("CAST(d.doc_id AS VARCHAR)")}
            AS DOUBLE) / 1152921504606846976.0 < r.keep_rate
 """,
 )
@@ -1163,8 +1126,6 @@ def dataset_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     domains-sized exchange), a 1-row totals broadcast, then the rate
     table (domains-sized, broadcast) joins the corpus map-side — the
     filter is a pure projection, no corpus shuffle."""
-    from .dedup import md5_hash60
-
     docs = load_table(spark, sf_dir, "documents")
     per_domain = docs.groupBy("lang", "source").agg(
         F.sum(F.size(F.split("text", " "))).cast("long").alias("n_tokens")
@@ -1182,7 +1143,7 @@ def dataset_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n_domains") * F.col("n_tokens")).cast("double"),
         ).alias("keep_rate"),
     )
-    u = md5_hash60(F.col("doc_id").cast("string")).cast("double") / F.lit(
+    u = md5_int(F.col("doc_id").cast("string")).cast("double") / F.lit(
         float(1 << 60)
     )
     return (
@@ -1287,8 +1248,7 @@ SHUFFLE_SHARDS = 64
     oracle=f"""
 WITH keyed AS (
   SELECT doc_id, source,
-         (('0x' || substr(md5('{SHUFFLE_SALT}' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT)
-           AS k
+         {duck_md5_int(f"'{SHUFFLE_SALT}' || CAST(doc_id AS VARCHAR)")} AS k
   FROM documents
 )
 SELECT doc_id, source,
@@ -1310,13 +1270,11 @@ def dataset_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard sorts ~corpus/64 independently and writers emit one file per
     shard. Changing the salt re-shuffles the corpus deterministically
     (epoch reshuffling = salt per epoch)."""
-    from .dedup import md5_hash60
-
     docs = load_table(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         "source",
-        md5_hash60(
+        md5_int(
             F.concat(F.lit(SHUFFLE_SALT), F.col("doc_id").cast("string"))
         ).alias("k"),
     )
@@ -2060,17 +2018,13 @@ CMS_TOPN = 20
 
 
 def _cms_col_spark(d: int) -> str:
-    return (
-        f"CAST(pmod(conv(substr(md5(concat(tok, '#{d}')), 1, 15), 16, 10),"
-        f" {CMS_WIDTH}) AS INT)"
-    )
+    h = spark_md5_int(f"concat(tok, '#{d}')")
+    return f"CAST(pmod({h}, {CMS_WIDTH}) AS INT)"
 
 
 def _cms_col_duck(d: int) -> str:
-    return (
-        f"CAST((('0x' || substr(md5(tok || '#{d}'), 1, 15))::BIGINT)"
-        f" % {CMS_WIDTH} AS INT)"
-    )
+    h = duck_md5_int(f"tok || '#{d}'")
+    return f"CAST({h} % {CMS_WIDTH} AS INT)"
 
 
 _CMS_ORACLE = f"""
@@ -2189,8 +2143,8 @@ HLL_LC_TABLE = tuple(
 HLL_LC_THRESHOLD = 5 * HLL_M // 2
 
 # 60-bit hash from the md5 hex prefix — same bridge the CMS family uses.
-_HLL_H_SPARK = "CAST(conv(substr(md5(tok), 1, 15), 16, 10) AS BIGINT)"
-_HLL_H_DUCK = "('0x' || substr(md5(tok), 1, 15))::BIGINT"
+_HLL_H_SPARK = spark_md5_int("tok")
+_HLL_H_DUCK = duck_md5_int("tok")
 
 
 def _hll_register_sql(h_expr: str, div: str) -> tuple[str, str]:
@@ -3187,13 +3141,8 @@ def dataset_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus by the order-insensitive token-bag fingerprint (text_fingerprint's
 # canon) and reports every group that spans >=2 splits, with the per-split
 # census. The split rule is EXACTLY dataset_split_assign's md5 first-hex
-# rule, shared below so the two operators cannot drift.
-SPLIT_CASE_SQL = (
-    "CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN "
-    "('0','1','2','3','4','5','6','7','8','9','a','b') THEN 'train' "
-    "WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('c','d') THEN 'val' "
-    "ELSE 'test' END"
-)
+# rule (crosshash.split_assign_col / SPLIT_CASE_SQL), so the two operators
+# cannot drift.
 
 _SPLIT_LEAKAGE_ORACLE = f"""
 WITH assigned AS (
@@ -3220,17 +3169,6 @@ SELECT fp AS fingerprint,
        CAST(test_docs AS BIGINT) AS test_docs
 FROM grp WHERE n_splits >= 2
 """
-
-
-def split_assign_col() -> "F.Column":
-    """dataset_split_assign's content-addressed split rule as a column —
-    the single definition both the assigner and the leakage audit use."""
-    first_hex = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    return (
-        F.when(first_hex.isin(*"0123456789ab"), "train")
-        .when(first_hex.isin("c", "d"), "val")
-        .otherwise("test")
-    )
 
 
 @register(
@@ -3604,12 +3542,8 @@ def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 DSIR_BUCKETS = 1024
 DSIR_TARGET_LANG = "en"  # the "target domain": English documents
 
-_DSIR_BUCKET_SPARK = (
-    f"CAST(pmod(conv(substr(md5(word), 1, 15), 16, 10), {DSIR_BUCKETS}) AS INT)"
-)
-_DSIR_BUCKET_DUCK = (
-    f"CAST((('0x' || substr(md5(word), 1, 15))::BIGINT) % {DSIR_BUCKETS} AS INT)"
-)
+_DSIR_BUCKET_SPARK = f"CAST(pmod({spark_md5_int('word')}, {DSIR_BUCKETS}) AS INT)"
+_DSIR_BUCKET_DUCK = f"CAST({duck_md5_int('word')} % {DSIR_BUCKETS} AS INT)"
 
 _DSIR_ORACLE = f"""
 WITH toks AS (

@@ -141,44 +141,21 @@ class HttpSinkConfig:
 
 
 def write_http(df: DataFrame, cfg: HttpSinkConfig, transport: Transport | None = None) -> None:
-    """POST each partition as JSONL batches with retry. Executor-side; the
-    driver never sees the data."""
+    """POST each partition as JSONL batches with ``post_with_retry``.
+    Executor-side; the driver never sees the data. The package is shipped
+    to the workers first (``session._ship_package``), so the executor
+    closure can call this module's retry loop and default transport."""
+    from ..session import _ship_package
+
+    _ship_package(df.sparkSession)
     url, headers = cfg.url, dict(cfg.headers or {"content-type": "application/jsonl"})
     batch_size, retries, backoff = cfg.batch_size, cfg.retries, cfg.backoff_s
-    if transport is not None:
-        tp = transport
-    else:
-        # defined inline (not the module-level default) so the closure is
-        # pickled by value for executors
-        def tp(u: str, body: bytes, hdrs: dict) -> int:
-            import urllib.request
+    tp = transport or _default_transport
 
-            req = urllib.request.Request(u, data=body, headers=hdrs, method="POST")
-            with urllib.request.urlopen(req, timeout=30) as resp:  # noqa: S310
-                return resp.status
-
-    # Executor-side closure: self-contained (inlines the retry loop rather
-    # than referencing this module's globals) — workers may not have the
-    # repo on sys.path; see session._ship_package.
     def send_partition(rows) -> None:
         import hashlib
-        import time as _time
 
         from pyspark import TaskContext
-
-        def _post_retry(u, body, hdrs):
-            attempt = 0
-            while True:
-                try:
-                    status = tp(u, body, hdrs)
-                    if status < 200 or status >= 300:
-                        raise IOError(f"HTTP error {status}")
-                    return status
-                except Exception:
-                    if attempt >= retries:
-                        raise
-                    _time.sleep(backoff * (2**attempt))
-                    attempt += 1
 
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
         batch: list[str] = []
@@ -189,7 +166,7 @@ def write_http(df: DataFrame, cfg: HttpSinkConfig, transport: Transport | None =
             body = "\n".join(batch).encode("utf-8")
             idem = hashlib.sha256(body).hexdigest()[:16]
             hdrs = {**headers, "idempotency-key": f"p{pid}-{idem}"}
-            _post_retry(url, body, hdrs)
+            post_with_retry(url, body, hdrs, tp, retries, backoff)
             batch.clear()
 
         for row in rows:
